@@ -1,6 +1,7 @@
 """Bloom filters: unit properties, DSL directives, and token-scan pruning."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,24 +40,31 @@ def test_bloom_dsl_parse_validate_apply():
         Prescription.parse("set column tokens bloom_filter maybe")
 
 
-def test_scan_token_prunes_chunks(spark, tmp_out):
+@pytest.mark.parametrize("probe", [100_001, -7], ids=["present", "absent"])
+def test_scan_token_prunes_chunks(spark, tmp_out, probe):
     tbl = generate_sequences(scale=0.03, profiles=["lowcard", "smallrange"], skew=False)
-    df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA)
+    tbl = tbl.append_column("score", pa.array(np.arange(tbl.num_rows, dtype=np.float64)))
+    df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA + ", score double")
     cfg = Prescription.parse("set column tokens bloom_filter true").apply()
     encode_job.run(spark, df, tmp_out, cfg=cfg, max_rows=200, max_values=60_000)
     enc = spark.read.parquet(f"{tmp_out}/encoded")
     assert enc.filter(F.col("bloom").isNull()).count() == 0  # every chunk row carries its tokens bloom
 
     # smallrange values live in [100000, 100000+2^12); lowcard's vocab is
-    # spread over the whole int32 space — pick a smallrange-only token
-    probe = 100_001
+    # spread over the whole int32 space — pick a smallrange-only token. The
+    # absent token is rejected by every bloom, so nothing is left to decode
     expected = df.filter(F.array_contains("tokens", probe))
     got = decode_job.scan_token(spark, tmp_out, probe)
-    assert got.count() == expected.count() > 0
+    assert got.columns == df.columns
+    assert got.count() == expected.count()
     # pruning: candidate chunks must exclude (nearly all) lowcard chunks
     total = enc.select("chunk_id").distinct().count()
     cands = decode_job.chunks_containing_token(spark, tmp_out, probe).count()
-    assert cands < total, f"no pruning: {cands} of {total}"
+    if probe > 0:
+        assert expected.count() > 0
+        assert cands < total, f"no pruning: {cands} of {total}"
+    else:
+        assert cands == 0
 
 
 def test_bloom_absent_by_default(spark, tmp_out):

@@ -29,12 +29,18 @@ def _sorted_pdf(df_or_tbl):
     return pdf.sort_values([c for c in ("doc_id", "source") if c in pdf.columns]).reset_index(drop=True)
 
 
-def test_matches_spark_decode(spark, tmp_path):
+@pytest.mark.parametrize("attempts", [1, 2])
+def test_matches_spark_decode(spark, tmp_path, attempts):
+    # two attempts: a crash-resumed table (see test_attempt_dedup_keeps_earliest),
+    # so decode()'s dedup semi-join meets local_reader's pyarrow-side dedup
     from tokenlake import decode_job
 
     df = _seq_df(spark, tmp_path, extra=True, nulls=True)
     out = str(tmp_path / "enc")
     encode_job.run(spark, df, out)
+    if attempts == 2:
+        encode_job.run(spark, df, out, resume=False)
+        assert sorted(decode_job._encoded_attempts(spark, out)) == [1, 2]
     local = _sorted_pdf(read_encoded_local(out))
     via_spark = _sorted_pdf(decode_job.decode(spark, out))
     assert list(local.columns) == list(via_spark.columns)

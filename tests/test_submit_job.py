@@ -85,3 +85,23 @@ def test_inherit_master_reuses_submit_session(spark):
 
     s = get_spark(master="")
     assert s.sparkContext.master == spark.sparkContext.master == "local[4]"
+
+
+@pytest.mark.parametrize(
+    "var,value",
+    [
+        ("SPARK_GRAFT_CPUS", "four"),
+        ("SPARK_GRAFT_CPUS", "0"),
+        ("TOKENLAKE_MAX_PARTITION_BYTES", "32 MB"),
+        ("TOKENLAKE_MAX_PARTITION_BYTES", "-1"),
+        ("TOKENLAKE_DRIVER_MEM", "lots"),
+        ("TOKENLAKE_DRIVER_MEM", "1.5g"),
+    ],
+)
+def test_get_spark_rejects_malformed_env_by_name(monkeypatch, var, value):
+    # the check runs before any session is built or reused
+    from tokenlake.session import get_spark
+
+    monkeypatch.setenv(var, value)
+    with pytest.raises(ValueError, match=var):
+        get_spark()

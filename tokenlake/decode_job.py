@@ -169,29 +169,25 @@ def decode_chunk_rows_for_ids(
     return pa.table({c: arrays[c] for c in columns}), touched
 
 
-def decode_chunk(t: pa.Table) -> pa.Table:
-    """Decode a table of encoded chunk rows (kernel entry; also usable
-    standalone on a driver-side pyarrow table). Canonical columns only."""
-    parts = []
+def _decode_chunks(
+    t: pa.RecordBatch | pa.Table,
+    need: list[str],
+    columns: tuple[str, ...],
+    want_ids: set | None = None,
+) -> Iterator[pa.Table]:
+    """The one per-chunk decode loop: each encoded chunk row of `t` → its
+    decoded rows (every row, or with `want_ids` only the rows whose doc_id
+    is in it). `need` names the payload columns `columns` need
+    (_payloads_for); chunks that yield no rows are skipped."""
+    cells = {c: t.column(f"payload_{c}") for c in need}
     for i in range(t.num_rows):
-        parts.append(
-            decode_chunk_row(
-                {
-                    c: t.column(f"payload_{c}")[i].as_py()
-                    for c in ("tokens", "n_tok", "doc_id", "source")
-                }
-            )
-        )
-    if not parts:
-        return pa.table(
-            {
-                "doc_id": pa.array([], pa.string()),
-                "tokens": pa.array([], pa.list_(pa.int32())),
-                "n_tok": pa.array([], pa.int32()),
-                "source": pa.array([], pa.string()),
-            }
-        )
-    return pa.concat_tables(parts)
+        payloads = {c: col[i].as_py() for c, col in cells.items()}
+        if want_ids is None:
+            out = decode_chunk_row(payloads, columns)
+        else:
+            out, _ = decode_chunk_rows_for_ids(payloads, want_ids, columns)
+        if out.num_rows:
+            yield out
 
 
 def extra_types_of(encoded: DataFrame, strict: bool = True) -> dict[str, str]:
@@ -244,6 +240,17 @@ def decode_dataframe(
     decode() for the metadata-driven path). mapInArrow needs the output
     schema at plan time, which is why extras carry their type here even
     though each payload is self-describing at runtime."""
+    return _decode_frame(encoded, columns, extra_types)
+
+
+def _decode_frame(
+    encoded: DataFrame,
+    columns: tuple[str, ...] | list[str] | None,
+    extra_types: dict[str, str] | None,
+    want_ids: set | None = None,
+) -> DataFrame:
+    """decode_dataframe, optionally restricted to the rows whose doc_id is
+    in `want_ids` (lookup's row-targeted decode)."""
     extra_types = dict(extra_types or {})
     payload_cols = {c[len("payload_") :] for c in encoded.columns if c.startswith("payload_")}
     unk = [c for c in extra_types if c not in payload_cols]
@@ -257,12 +264,7 @@ def decode_dataframe(
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            t = pa.Table.from_batches([batch])
-            for i in range(t.num_rows):
-                out = decode_chunk_row(
-                    {c: t.column(f"payload_{c}")[i].as_py() for c in need},
-                    cols,
-                )
+            for out in _decode_chunks(batch, need, cols, want_ids):
                 yield from out.to_batches()
 
     return encoded.select(*[f"payload_{p}" for p in need]).mapInArrow(fn, schema)
@@ -296,28 +298,27 @@ def read_encoded(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/encoded")
 
 
-def _attempt_count(spark: SparkSession, out_dir: str) -> int | None:
-    """Number of `attempt=N` partition dirs under the encoded table, via the
-    Hadoop FS API (one driver-side listStatus — no Spark job), or None when
-    the listing fails (non-FS sources): callers must then assume many.
-
-    Duplicate chunk rows can only exist ACROSS attempts (one applyInArrow
-    output row per chunk within an attempt; a crash-resume lands the
-    re-encode in a fresh attempt dir), so a single-attempt table needs no
-    dedup pass — the common case pays zero extra jobs for crash safety."""
-    try:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/encoded")
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return None
-        n = 0
-        for st in fs.listStatus(p):
-            if st.getPath().getName().startswith("attempt="):
-                n += 1
-        return n
-    except Exception:
-        return None
+def _encoded_attempts(spark: SparkSession, out_dir: str) -> list[int]:
+    """The `attempt=N` partition numbers under `{out_dir}/encoded`, via the
+    Hadoop FS API (one driver-side listStatus, no Spark job; file://,
+    hdfs://, s3a:// alike), or [] when the table does not exist. A dir
+    counts even when a crashed job committed no data files into it. Listing
+    errors propagate: encode must never reuse an attempt number, and decode
+    decides for itself what a failed listing means."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/encoded")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return []
+    attempts = []
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if name.startswith("attempt="):
+            try:
+                attempts.append(int(name.split("=", 1)[1]))
+            except ValueError:
+                continue
+    return attempts
 
 
 def decode(
@@ -326,11 +327,20 @@ def decode(
     columns: tuple[str, ...] | list[str] | None = None,
 ) -> DataFrame:
     """Decode a stored table — extras (and their Spark types) discovered
-    from the chunk metrics automatically. Tables with a single attempt
-    partition (the overwhelmingly common case) skip the dedup semi-join
-    outright — see _attempt_count."""
+    from the chunk metrics automatically.
+
+    Duplicate chunk rows can only exist ACROSS attempts (one applyInArrow
+    output row per chunk within an attempt; a crash-resume lands the
+    re-encode in a fresh attempt dir), so a table with a single attempt
+    partition (the overwhelmingly common case) skips the dedup semi-join
+    outright — the common case pays zero extra jobs for crash safety. A
+    listing that fails (non-FS sources) counts as many attempts."""
     enc = read_encoded(spark, out_dir)
-    if _attempt_count(spark, out_dir) != 1:
+    try:
+        single = len(_encoded_attempts(spark, out_dir)) == 1
+    except Exception:
+        single = False
+    if not single:
         enc = dedup_attempts(enc)
     return decode_dataframe(enc, columns, extra_types=extra_types_of(enc))
 
@@ -438,11 +448,12 @@ def chunks_containing_value(
 def scan_token(spark: SparkSession, out_dir: str, token: int) -> DataFrame:
     """All rows whose token array contains `token`, decoding only chunks the
     bloom filters admit (semi-join — candidate sets never hit the driver)."""
+    enc = read_encoded(spark, out_dir)
     cands = chunks_containing_token(spark, out_dir, token)
-    pruned = dedup_attempts(
-        read_encoded(spark, out_dir).join(cands, "chunk_id", "left_semi")
-    )
-    return decode_dataframe(pruned, extra_types=extra_types_of(pruned)).filter(
+    pruned = dedup_attempts(enc.join(cands, "chunk_id", "left_semi"))
+    # extra types come from the whole table: when the blooms reject every
+    # chunk the pruned frame has no metrics rows to read them from
+    return decode_dataframe(pruned, extra_types=extra_types_of(enc)).filter(
         F.array_contains("tokens", F.lit(int(token)))
     )
 
@@ -645,24 +656,9 @@ def lookup(spark: SparkSession, out_dir: str, doc_ids: list[str]) -> DataFrame:
             )
 
         pruned = pruned.filter(admits(_column_bloom_expr(enc, "doc_id")))
-    pruned = dedup_attempts(pruned)
     # row-targeted decode: only matched rows materialize, and FLAG_BLOCKED
     # extras (R10 small-pages) decode only the blocks covering them —
     # O(#ids) payload bytes per candidate chunk instead of the whole chunk
-    extra_types = extra_types_of(enc)
-    cols = (*ALL_COLUMNS, *extra_types)
-    need = _payloads_for(cols, extra_types)
-    schema = ", ".join(f"{c} {_COLUMN_TYPES.get(c) or extra_types[c]}" for c in cols)
-    want = set(doc_ids)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            t = pa.Table.from_batches([batch])
-            for i in range(t.num_rows):
-                out, _ = decode_chunk_rows_for_ids(
-                    {c: t.column(f"payload_{c}")[i].as_py() for c in need}, want, cols
-                )
-                if out.num_rows:
-                    yield from out.to_batches()
-
-    return pruned.select(*[f"payload_{p}" for p in need]).mapInArrow(fn, schema)
+    return _decode_frame(
+        dedup_attempts(pruned), None, extra_types_of(enc), want_ids=set(doc_ids)
+    )

@@ -975,7 +975,7 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     # to a third aggregate) re-read the encoded table's metadata three
     # times — at ~10^6 chunks (~10^5 files) repeated file-open overhead
     # turns a planner call into minutes (measured super-linear at the
-    # 5k-chunk rehearsal, tools/scale_rehearsal.py). Aggregate per
+    # 5k-chunk rehearsal, BENCH/BASELINE.md §6). Aggregate per
     # (column, codec, outer) once and fold the majority vote driver-side:
     # O(#columns × #codecs × #outers) rows reach the driver, never #chunks.
     grows = (
@@ -1080,27 +1080,6 @@ def run(
     enc_path = f"{out_dir}/encoded"
     lin_path = f"{out_dir}/lineage"
 
-    def _max_encoded_attempt(spark, path: str) -> int | None:
-        """Highest attempt=N partition dir under the encoded table, via the
-        Hadoop FS API (works for file://, hdfs://, s3a:// alike). A dir
-        counts even when the crashed job committed no data files in it —
-        skipping a number is free; re-using one corrupts."""
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return None
-        best = None
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("attempt="):
-                try:
-                    a = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                best = a if best is None or a > best else best
-        return best
-
     cfg = cfg or EncodeConfig()
     extras = extra_columns_of(df.columns, input_side=True)
     enc_ddl = encoded_schema_ddl(extras)
@@ -1122,7 +1101,9 @@ def run(
     # dedup_attempts (min attempt per chunk) cannot remove. Skipping past
     # every existing dir keeps the re-encode in a fresh attempt, where the
     # dedup works as designed.
-    enc_max = _max_encoded_attempt(spark, enc_path)
+    from .decode_job import _encoded_attempts
+
+    enc_max = max(_encoded_attempts(spark, out_dir), default=None)
     if enc_max is not None and enc_max >= attempt:
         attempt = enc_max + 1
 

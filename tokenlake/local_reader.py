@@ -19,7 +19,7 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.dataset as ds
 
-from .decode_job import decode_chunk_row
+from .decode_job import _decode_chunks, _payloads_for
 
 ROW_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
 
@@ -44,8 +44,7 @@ def read_encoded_local(
         if missing:
             raise ValueError(f"columns not in this table: {missing}; stored: {sorted(stored)}")
         cols = list(columns)
-    # tokens rows are rebuilt from the n_tok payload's lengths + validity
-    need = sorted({*cols, *({"n_tok"} if "tokens" in cols else set())})
+    need = _payloads_for(tuple(cols), dict.fromkeys(stored))
 
     # attempt dedup, metrics-weight: scan only (chunk_id, attempt) first
     if "attempt" in names:
@@ -61,22 +60,13 @@ def read_encoded_local(
     else:
         keep = None
 
-    payload_cols = [f"payload_{c}" for c in need]
-    scan_cols = payload_cols + (["chunk_id", "attempt"] if keep is not None else ["chunk_id"])
+    scan_cols = [f"payload_{c}" for c in need] + (["chunk_id", "attempt"] if keep is not None else [])
     parts: list[pa.Table] = []
     for batch in dataset.to_batches(columns=scan_cols):
-        t = pa.Table.from_batches([batch])
-        for i in range(t.num_rows):
-            if keep is not None:
-                key = (t.column("chunk_id")[i].as_py(), t.column("attempt")[i].as_py())
-                if key not in keep:
-                    continue
-            parts.append(
-                decode_chunk_row(
-                    {c: t.column(f"payload_{c}")[i].as_py() for c in need},
-                    tuple(cols),
-                )
-            )
+        if keep is not None:
+            rows = zip(batch.column("chunk_id").to_pylist(), batch.column("attempt").to_pylist())
+            batch = batch.filter(pa.array([k in keep for k in rows], pa.bool_()))
+        parts.extend(_decode_chunks(batch, need, tuple(cols)))
     if not parts:
         raise ValueError(f"no chunks found under {out_dir}/encoded")
     return pa.concat_tables(parts)

@@ -9,8 +9,25 @@ fan-out in chunking.py).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_COUNT = r"[1-9][0-9]*"
+_BYTES = r"[1-9][0-9]*([kmgtp]b?|b)?"  # Spark/JVM byte-size strings: 512m, 32mb, 1g
+
+
+def _env(name: str, default: str, pattern: str) -> str:
+    """Environment override `name` (else `default`); a malformed value fails
+    here, by name, instead of as an opaque Spark/JVM error at launch."""
+    value = os.environ.get(name, default)
+    if not re.fullmatch(pattern, value, re.IGNORECASE):
+        raise ValueError(f"{name}={value!r} is malformed; expected a value matching {pattern}")
+    return value
+
+
+def _host_ram_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
 
 
 def get_spark(
@@ -22,7 +39,7 @@ def get_spark(
     whatever `spark-submit --master ...` / the cluster manager provided.
     That is the deploy path (jobs/submit_encode.py); `None` keeps the
     local[] default for in-process library use and tests."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _env("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))), _COUNT)
     inherit = master == ""
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -30,12 +47,12 @@ def get_spark(
             # cluster mode: executors × cores isn't knowable here; AQE
             # coalescing makes 2× core-count a safe static floor, and the
             # deploy wrapper can override per cluster size
-            shuffle_partitions = int(os.environ.get("TOKENLAKE_SHUFFLE_PARTITIONS", "64"))
+            shuffle_partitions = int(_env("TOKENLAKE_SHUFFLE_PARTITIONS", "64", _COUNT))
         else:
             n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
             # local[4,2] (maxFailures) and local-cluster[2,1,1024] are valid
             # master forms: take the FIRST bracket field; anything
-            # unparsable falls back to the 32-core default instead of
+            # unparsable falls back to the host's core count instead of
             # crashing before the session even builds
             head = n.split(",")[0].strip()
             # 1× the core count: an interleaved A/B (r7) of 2×-core shuffle
@@ -44,7 +61,7 @@ def get_spark(
             # more in per-task Arrow/Python launch overhead than it buys in
             # group balance, and AQE already splits genuinely skewed
             # partitions
-            shuffle_partitions = 32 if not head.isdigit() else max(8, int(head))
+            shuffle_partitions = max(8, int(head if head.isdigit() else cpus))
     builder = SparkSession.builder
     if not inherit:
         builder = builder.master(master)
@@ -71,7 +88,7 @@ def get_spark(
         # (guide §6: bigger sequential scans want bigger splits).
         .config(
             "spark.sql.files.maxPartitionBytes",
-            os.environ.get("TOKENLAKE_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
+            _env("TOKENLAKE_MAX_PARTITION_BYTES", str(32 * 1024 * 1024), _BYTES),
         )
         # files.openCostInBytes deliberately stays at the Spark default
         # (4 MB): an interleaved A/B over a 5,334-chunk / 667-file encoded
@@ -79,7 +96,10 @@ def get_spark(
         # (decode 1.6-2.1s -> 5.3-6.0s, lookup 4.5-5.3s -> 16.7-21.6s,
         # plan_from_encoded 0.55s -> 1.2-1.9s) — one-file-per-task pays a
         # per-task Python/launch overhead that swamps the parallelism gain
-        .config("spark.driver.memory", os.environ.get("TOKENLAKE_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            _env("TOKENLAKE_DRIVER_MEM", f"{min(48 * 1024, _host_ram_mb())}m", _BYTES),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )

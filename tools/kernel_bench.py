@@ -4,7 +4,7 @@ reference's single-threaded decode leaderboard (README.md:94-99: 960 MB of
 parquet decoded in 1.59 s ≈ 0.60 GB/s of compressed bytes, best-of-3,
 current_thread tokio runtime).
 
-Runs encode_chunk/decode_chunk directly (no Spark, one thread) over the
+Runs encode_chunk/decode_chunk_row directly (no Spark, one thread) over the
 FIXTURES profiles at a given scale, best-of-N, and prints one JSON line with
 ms/Mtok and GB/s in both raw-token-bytes and compressed-bytes terms.
 
@@ -29,7 +29,7 @@ def main() -> None:
     scale = float(sys.argv[1]) if len(sys.argv) > 1 else 0.3
     iters = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
-    from tokenlake.decode_job import decode_chunk
+    from tokenlake.decode_job import ALL_COLUMNS, decode_chunk_row
     from tokenlake.encode_job import encode_chunk
     from tokenlake.schema import generate_sequences
 
@@ -65,12 +65,15 @@ def main() -> None:
         )
     )
 
-    decode_chunk(enc[0])
+    def decode(e):
+        return decode_chunk_row({c: e.column(f"payload_{c}")[0].as_py() for c in ALL_COLUMNS})
+
+    decode(enc[0])
     dec_times = []
     for _ in range(iters):
         t0 = time.perf_counter()
         for e in enc:
-            decode_chunk(e)
+            decode(e)
         dec_times.append(time.perf_counter() - t0)
 
     # single-thread parquet-snappy baseline on the SAME rows (pyarrow,
