@@ -40,14 +40,22 @@ def test_bloom_dsl_parse_validate_apply():
         Prescription.parse("set column tokens bloom_filter maybe")
 
 
-@pytest.mark.parametrize("probe", [100_001, -7], ids=["present", "absent"])
-def test_scan_token_prunes_chunks(spark, tmp_out, probe):
+@pytest.mark.parametrize(
+    "probe, attempts",
+    [(100_001, 1), (-7, 1), (100_001, 2), (-7, 2)],
+    ids=["present", "absent", "present-2", "absent-2"],
+)
+def test_scan_token_prunes_chunks(spark, tmp_out, probe, attempts):
     tbl = generate_sequences(scale=0.03, profiles=["lowcard", "smallrange"], skew=False)
     tbl = tbl.append_column("score", pa.array(np.arange(tbl.num_rows, dtype=np.float64)))
     df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA + ", score double")
     cfg = Prescription.parse("set column tokens bloom_filter true").apply()
-    encode_job.run(spark, df, tmp_out, cfg=cfg, max_rows=200, max_values=60_000)
+    for _ in range(attempts):
+        # a second attempt re-encodes every chunk (resume off): the
+        # crash-resume duplicate shape, which reads must ignore
+        encode_job.run(spark, df, tmp_out, cfg=cfg, max_rows=200, max_values=60_000, resume=False)
     enc = spark.read.parquet(f"{tmp_out}/encoded")
+    assert enc.select("attempt").distinct().count() == attempts
     assert enc.filter(F.col("bloom").isNull()).count() == 0  # every chunk row carries its tokens bloom
 
     # smallrange values live in [100000, 100000+2^12); lowcard's vocab is
@@ -59,7 +67,9 @@ def test_scan_token_prunes_chunks(spark, tmp_out, probe):
     assert got.count() == expected.count()
     # pruning: candidate chunks must exclude (nearly all) lowcard chunks
     total = enc.select("chunk_id").distinct().count()
-    cands = decode_job.chunks_containing_token(spark, tmp_out, probe).count()
+    ids = [r["chunk_id"] for r in decode_job.chunks_containing_token(spark, tmp_out, probe).collect()]
+    assert len(ids) == len(set(ids)), "a chunk id is listed once per attempt"
+    cands = len(ids)
     if probe > 0:
         assert expected.count() > 0
         assert cands < total, f"no pruning: {cands} of {total}"

@@ -98,9 +98,9 @@ def assign_chunks(df: DataFrame, buckets: DataFrame, salt: str | None = None) ->
 def chunk_id_prefix(col: str = "chunk_id"):
     """Everything before a chunk id's trailing '#<bucket>' — the (source
     [+ salt]) prefix. NOT substring_index to the first '#': source names
-    may contain '#'. THE shared derivation (lint's per-source fraction map,
-    lookup's candidate reconstruction) — the chunk-id grammar lives here,
-    next to assign_chunks which writes it.
+    may contain '#'. THE shared derivation (lint's per-source fraction map;
+    chunk_id_bucket is its Python complement) — the chunk-id grammar lives
+    here, next to assign_chunks which writes it.
     """
     from pyspark.sql import functions as F
 
@@ -108,3 +108,9 @@ def chunk_id_prefix(col: str = "chunk_id"):
         f"substring({col}, 1, length({col})"
         f" - length(element_at(split({col}, '#'), -1)) - 1)"
     )
+
+
+def chunk_id_bucket(chunk_id: str) -> str:
+    """The trailing '<bucket>' of one chunk id string — chunk_id_prefix's
+    complement, for driver- and UDF-side code (lookup's candidate test)."""
+    return chunk_id.rsplit("#", 1)[-1]

@@ -1191,7 +1191,7 @@ def run(
                 for c, ddl in stored_types.items():
                     if "time(6)" not in ddl or c not in extras:
                         continue
-                    code = _stored_dtype_code(stored, c)
+                    code = _stored_dtype_code(spark, out_dir, c)
                     if code is not None and code != DT_TIME_NS:
                         raise ValueError(
                             f"append tick-unit mismatch at {out_dir!r}: column "

@@ -16,6 +16,13 @@ chunk's encoded body size and a bounded zstd-3 trial ratio); the vote and the
 aggregates are computed in Spark (one groupBy("column")), so only one row per
 column reaches the driver. `decide` is the pure policy over those aggregates
 — unit-testable against the reference's own test scenarios.
+
+Caveat for `compression none`: the encoded table is written as
+UNCOMPRESSED parquet (payloads are already codec + outer compressed), so a
+payload whose outer is "none" — forced by a `set [column C] compression
+none` directive, or declined by `auto` on a small or incompressible body —
+is stored raw, with no snappy layer underneath. Forcing "none" on
+compressible data therefore inflates the encoded table.
 """
 
 from __future__ import annotations

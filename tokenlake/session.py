@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 
 _COUNT = r"[1-9][0-9]*"
 _BYTES = r"[1-9][0-9]*([kmgtp]b?|b)?"  # Spark/JVM byte-size strings: 512m, 32mb, 1g
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _env(name: str, default: str, pattern: str) -> str:
@@ -65,6 +66,11 @@ def get_spark(
     builder = SparkSession.builder
     if not inherit:
         builder = builder.master(master)
+        if master.startswith("local"):
+            # local Python workers inherit the JVM's PYTHONPATH, not the
+            # driver's sys.path: put this package's root on it so UDFs that
+            # reference tokenlake unpickle wherever the caller imported it
+            builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
