@@ -470,10 +470,10 @@ def test_prescription_dictionary_growth(spark):
     start page → grow the limit (doubling); >16 MB → shrink chunks instead
     (dictionary_encoding.rs:155-240)."""
 
-    def mkrow(payload):
+    def mkrow(payload, column="tokens", codec="dict", chunk="c#0"):
         # field order = LINT_SCHEMA (round 4 added distinct_est, max_zz_delta,
         # min_val, max_val)
-        return ("c#0", "tokens", "dict", "dictionary-encoding-cardinality",
+        return (chunk, column, codec, "dictionary-encoding-cardinality",
                 "suggestion", 100, 1000, 50000, 500, 10, 0, 4096,
                 0.01, 1.0, 0.5, 1000, 0.5, payload, "column")
 
@@ -486,6 +486,35 @@ def test_prescription_dictionary_growth(spark):
     assert "set file max_chunk_rows 500" in rx2.format()  # 1000 × 16/32
     assert f"set column tokens dictionary_page_size_limit {16 << 20}" in rx2.format()
     rx2.apply()  # emitted directives must be valid DSL
+
+    # two overflowing dict columns: the file-level shrink is the tighter one
+    # (64 MB → 1000 × 16/64), once; directives come out family by family
+    both = spark.createDataFrame(
+        [mkrow(32 << 20), mkrow(64 << 20, column="n_tok")], schema=lint_job.LINT_SCHEMA
+    )
+    assert lint_job.prescription_from_decisions(both).format().splitlines() == [
+        "set column n_tok encoding dict",
+        "set column tokens encoding dict",
+        f"set column n_tok dictionary_page_size_limit {16 << 20}",
+        f"set column tokens dictionary_page_size_limit {16 << 20}",
+        "set file max_chunk_rows 250",
+    ]
+
+    # a 1:1 codec tie goes to the smaller codec name, whatever the row order
+    tie = [mkrow(0, codec="rle", chunk="c#0"), mkrow(0, codec="delta", chunk="c#1")]
+    for rows in (tie, tie[::-1]):
+        d = spark.createDataFrame(rows, schema=lint_job.LINT_SCHEMA)
+        assert lint_job.prescription_from_decisions(d).format() == "set column tokens encoding delta"
+
+    # the driver fold does not depend on how the decisions are partitioned
+    mixed = spark.createDataFrame(
+        [mkrow(32 << 20, chunk=f"c#{i}", codec=("dict", "for")[i % 3 == 0],
+               column=("tokens", "n_tok", "emb")[i % 3])
+         for i in range(30)],
+        schema=lint_job.LINT_SCHEMA,
+    )
+    want = lint_job.prescription_from_decisions(mixed).format()
+    assert lint_job.prescription_from_decisions(mixed.repartition(7)).format() == want
 
 
 # --------------------------------------------------------------------- CLI

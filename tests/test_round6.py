@@ -671,6 +671,20 @@ def test_dedup_components_matches_union_find(spark):
     assert all(c == min(c, c) and c in ids for c in got)
 
 
+def test_min_label_components_converging_on_max_iter(spark):
+    """Labels that settle on the last allowed update are a result, not a
+    failure; labels still moving after it raise."""
+    from tokenlake.similarity import min_label_components
+
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "x long, y long")
+    ids = spark.createDataFrame([(i,) for i in range(4)], "x long")
+    for max_iter in (3, 4):
+        got = [tuple(r) for r in min_label_components(pairs, ids, max_iter=max_iter).collect()]
+        assert got == [(0, 4, 3)]
+    with pytest.raises(RuntimeError, match="did not converge in max_iter=2"):
+        min_label_components(pairs, ids, max_iter=2)
+
+
 def test_corpus_curation_funnel_invariants(spark):
     """The curation funnel's accounting must balance exactly: per source,
     n_docs = dropped_quality + dropped_exact + dropped_neardup + kept,

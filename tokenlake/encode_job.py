@@ -27,8 +27,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .chunking import MAX_CHUNK_ROWS, MAX_CHUNK_VALUES, assign_chunks, plan_buckets
 from .codecs import codec_of, encode_int_column, encode_str_column
 from .codecs.bloom import build_bloom
+from .codecs.container import (
+    DT_BOOL,
+    DT_FIXED_BINARY,
+    DT_FLOAT32,
+    DT_FLOAT64,
+    DT_INT32,
+    DT_STRING,
+    is_wide,
+)
 from .plan import EncodeConfig
-from .select import select_codec
+from .select import Decision, select_codec, select_float_codec
 from .stats import compute_chunk_stats
 
 # One encoded row per CHUNK (round 2 layout): per-column payloads are
@@ -278,6 +287,36 @@ def _coerce_str_codec(name: str) -> str:
     return mapped
 
 
+def _choose_str(valid: pa.Array, dtype: int, name: str, cfg: EncodeConfig):
+    """The one codec decision for a string/binary column (lint and encode both
+    call it) → (codec, pre-built body or None, rule, trial). `trial` is the
+    array the race ran on: fixed-size binary is cast to large_binary (a
+    large_string cast would crash on the non-UTF-8 bytes the encoder
+    accepts). A forced codec is mapped onto the string family."""
+    trial = valid.cast(pa.large_binary()) if dtype == DT_FIXED_BINARY else valid
+    forced = cfg.overrides.get(name)
+    if forced:
+        return _coerce_str_codec(forced), None, "forced", trial
+    codec, body, rule = _pick_str_codec(trial, allow_dict=f"!dict:{name}" not in cfg.overrides)
+    return codec, body, rule, trial
+
+
+def _choose_num(view: np.ndarray, st, dtype: int, name: str, cfg: EncodeConfig) -> Decision:
+    """The one codec decision for an int-carrier column (lint and encode both
+    call it): bool bit-packs as FOR unless forced, floats take the R4 bss
+    gate, everything else the int selector — each under the column's
+    forced codec, `!dict` marker and dictionary page limit from `cfg`."""
+    forced = cfg.overrides.get(name)
+    if dtype == DT_BOOL:
+        return Decision(forced or "for", (st.n_values + 7) // 8, "forced" if forced else "bool-bitpack")
+    select = select_float_codec if dtype in (DT_FLOAT32, DT_FLOAT64) else select_codec
+    return select(
+        view, st, forced=forced, wide=is_wide(dtype),
+        allow_dict=f"!dict:{name}" not in cfg.overrides,
+        dict_page_limit=cfg.dict_limit_for(name),
+    )
+
+
 def _patch_decimal128_stats(st, valid: pa.Array, dtype: int):
     """decimal128 metrics min/max: the carrier view is the LO word only, so
     compute_chunk_stats' bounds are meaningless for precision > 18. Replace
@@ -300,22 +339,18 @@ def _patch_decimal128_stats(st, valid: pa.Array, dtype: int):
 def _encode_list_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
     """One extra LIST column → (payload, stats, rule, n_values, dtype_ddl).
     The tokens pattern generalized: flattened values pick their codec via
-    the normal per-family selector (floats → the R4 bss gate — the
-    reference's embedding detection, rules/vector_embedding.rs:19-76,
-    finally feeding a real codec path); per-row lengths FOR-pack inside the
-    same self-describing frame."""
+    the shared dispatch (floats → the R4 bss gate — the reference's
+    embedding detection, rules/vector_embedding.rs:19-76, finally feeding a
+    real codec path); per-row lengths FOR-pack inside the same
+    self-describing frame."""
     from .codecs.container import (
-        DT_BOOL,
-        DT_FLOAT32,
-        DT_FLOAT64,
+        DT_DECIMAL128,
         dtype_of_arrow,
         encode_list_column,
         int_view_of,
         is_string_kind,
-        is_wide,
         spark_ddl_of_arrow,
     )
-    from .select import select_codec, select_float_codec
 
     t = arr.type
     if pa.types.is_fixed_size_list(t):
@@ -324,9 +359,6 @@ def _encode_list_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
     elem = dtype_of_arrow(t.value_type)
     ddl = f"array<{spark_ddl_of_arrow(t.value_type)}>"
     outer = cfg.outer_for(name)
-    forced = cfg.overrides.get(name)
-    from .codecs.container import DT_FIXED_BINARY
-
     values = arr.flatten()
     # R10 small-pages knob: a per-column data_page_size_limit splits the
     # list payload into independently decodable blocks sized to the byte
@@ -342,12 +374,7 @@ def _encode_list_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
         block_rows = max(16, page_limit // per_row)
     valid = values.drop_null() if values.null_count else values
     if is_string_kind(elem):
-        trial = valid.cast(pa.large_binary()) if elem == DT_FIXED_BINARY else valid
-        body = None
-        if forced:
-            codec, rule = _coerce_str_codec(forced), "forced"
-        else:
-            codec, body, rule = _pick_str_codec(trial, allow_dict=f"!dict:{name}" not in cfg.overrides)
+        codec, body, rule, _ = _choose_str(valid, elem, name, cfg)
         if elem == DT_FIXED_BINARY or values.null_count or block_rows:
             body = None  # fsb needs its width header; nulls need the bitmap
         return (
@@ -357,33 +384,13 @@ def _encode_list_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
             len(values),
             ddl,
         )
-    if elem == DT_BOOL:
-        return (
-            encode_list_column(arr, forced or "for", outer, block_rows=block_rows),
-            None,
-            "bool-bitpack",
-            len(values),
-            ddl,
-        )
     view = int_view_of(valid, elem) if len(valid) else np.empty(0, np.int32)
-    wide = is_wide(elem)
     st = compute_chunk_stats(view, n_rows=len(arr))
-    if elem in (DT_FLOAT32, DT_FLOAT64):
-        d = select_float_codec(
-            view, st, forced=forced, wide=wide,
-            allow_dict=f"!dict:{name}" not in cfg.overrides,
-            dict_page_limit=cfg.dict_limit_for(name),
-        )
-    else:
-        d = select_codec(
-            view, st, forced=forced,
-            allow_dict=f"!dict:{name}" not in cfg.overrides,
-            dict_page_limit=cfg.dict_limit_for(name),
-            wide=wide,
-        )
+    d = _choose_num(view, st, elem, name, cfg)
     payload = encode_list_column(arr, d.codec, outer, block_rows=block_rows)
-    from .codecs.container import DT_DECIMAL128
-
+    if elem == DT_BOOL:
+        return payload, None, d.rule, len(values), ddl
+    wide = is_wide(elem)
     elem_bytes = 16 if elem == DT_DECIMAL128 else 8 if wide else 4
     if d.codec not in ("plain", "bss") and len(payload) > len(view) * elem_bytes + 128:
         # hard guarantee: never worse than plain (R3 escape hatch)
@@ -398,18 +405,16 @@ def _encode_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
     dtype_ddl|None) — the last two are set only for list columns (element
     count and the array<...> DDL string).
     Dispatch: Spark/Arrow type → codec family (the generic column registry;
-    reference column_context.rs:213-292 covers the same physical types)."""
+    reference column_context.rs:213-292 covers the same physical types),
+    then the shared `_choose_str` / `_choose_num` decision."""
     from .codecs.container import (
-        DT_BOOL,
-        DT_FLOAT32,
-        DT_FLOAT64,
+        DT_DECIMAL128,
         dtype_of_arrow,
         encode_any_column,
         int_view_of,
         is_string_kind,
-        is_wide,
+        spark_ddl_of_arrow,
     )
-    from .select import select_float_codec
 
     if (
         pa.types.is_list(arr.type)
@@ -417,25 +422,14 @@ def _encode_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
         or pa.types.is_fixed_size_list(arr.type)
     ):
         return _encode_list_extra(arr, name, cfg)
-    from .codecs.container import spark_ddl_of_arrow
-
-    from .codecs.container import DT_FIXED_BINARY
-
     dtype = dtype_of_arrow(arr.type)
     # exact DDL for the metrics row: decimal carries (p, s) the dtype BYTE
     # cannot (the payload header stores them separately)
     ddl = spark_ddl_of_arrow(arr.type)
     outer = cfg.outer_for(name)
-    forced = cfg.overrides.get(name)
     valid = arr.drop_null() if arr.null_count else arr
     if is_string_kind(dtype):
-        # fixed-size binary runs the trial race as large_binary (a
-        # large_string cast would crash on non-UTF-8 bytes)
-        trial = valid.cast(pa.large_binary()) if dtype == DT_FIXED_BINARY else valid
-        if forced:
-            codec, body, rule = _coerce_str_codec(forced), None, "forced"
-        else:
-            codec, body, rule = _pick_str_codec(trial, allow_dict=f"!dict:{name}" not in cfg.overrides)
+        codec, body, rule, _ = _choose_str(valid, dtype, name, cfg)
         if body is not None and not arr.null_count and dtype != DT_FIXED_BINARY:
             # the winning trial body IS the payload (same reuse as doc_id).
             # NOT for fixed-size binary: its payload needs the u32 width
@@ -446,27 +440,13 @@ def _encode_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
 
             return wrap(STR_CODEC_IDS[codec], body, outer, dtype), None, rule, None, ddl
         return encode_any_column(arr, codec, outer), None, rule, None, ddl
-    if dtype == DT_BOOL:
-        return encode_any_column(arr, forced or "for", outer), None, "bool-bitpack", None, ddl
     view = int_view_of(valid, dtype) if len(valid) else np.empty(0, np.int32)
-    wide = is_wide(dtype)
     st = compute_chunk_stats(view, n_rows=len(arr))
-    if dtype in (DT_FLOAT32, DT_FLOAT64):
-        d = select_float_codec(
-            view, st, forced=forced, wide=wide,
-            allow_dict=f"!dict:{name}" not in cfg.overrides,
-            dict_page_limit=cfg.dict_limit_for(name),
-        )
-    else:
-        d = select_codec(
-            view, st, forced=forced,
-            allow_dict=f"!dict:{name}" not in cfg.overrides,
-            dict_page_limit=cfg.dict_limit_for(name),
-            wide=wide,
-        )
+    d = _choose_num(view, st, dtype, name, cfg)
     payload = encode_any_column(arr, d.codec, outer)
-    from .codecs.container import DT_DECIMAL128
-
+    if dtype == DT_BOOL:
+        return payload, None, d.rule, None, ddl
+    wide = is_wide(dtype)
     elem = 16 if dtype == DT_DECIMAL128 else 8 if wide else 4
     if d.codec not in ("plain", "bss") and len(payload) > len(view) * elem + 64:
         # hard guarantee: never worse than plain (R3 escape hatch)
@@ -557,7 +537,6 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
     """
     t0 = time.perf_counter()
     cfg = cfg or EncodeConfig()
-    overrides = cfg.overrides
     t = t.combine_chunks()
     chunk_id = t.column("chunk_id")[0].as_py()
     nbuckets = t.column("nbuckets")[0].as_py()
@@ -696,11 +675,7 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
         return len(fact_cache["f"][0])
 
     st = compute_chunk_stats(flat, n_rows, ndv_resolver=_resolve_ndv, minmax=tmm)
-    decision = select_codec(
-        flat, st, forced=overrides.get("tokens"),
-        allow_dict="!dict:tokens" not in overrides,
-        dict_page_limit=cfg.dict_limit_for("tokens"),
-    )
+    decision = _choose_num(flat, st, DT_INT32, "tokens", cfg)
     payload = encode_int_column(
         flat, decision.codec, outer=cfg.outer_for("tokens"), fact=fact_cache.get("f")
     )
@@ -720,11 +695,7 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
         zero_copy_only=False
     ).astype(np.int32)
     lst = compute_chunk_stats(lens_valid, n_rows)
-    ldec = select_codec(
-        lens_valid, lst, forced=overrides.get("n_tok"),
-        allow_dict="!dict:n_tok" not in overrides,
-        dict_page_limit=cfg.dict_limit_for("n_tok"),
-    )
+    ldec = _choose_num(lens_valid, lst, DT_INT32, "n_tok", cfg)
     if ntok_arr.null_count:
         from .codecs.container import encode_any_column
 
@@ -741,22 +712,13 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
     from .codecs.container import wrap as _wrap
     from .codecs.strcodecs import STR_CODEC_IDS
 
-    forced_doc = overrides.get("doc_id")
-    doc_body = None
-    if forced_doc:
-        doc_codec, doc_rule = _coerce_str_codec(forced_doc), "forced"
-    else:
-        doc_codec, doc_body, doc_rule = _pick_str_codec(
-            doc_valid, allow_dict="!dict:doc_id" not in overrides
-        )
+    doc_codec, doc_body, doc_rule, _ = _choose_str(doc_valid, DT_STRING, "doc_id", cfg)
     if doc.null_count:
         from .codecs.container import encode_any_column
 
         dbuf = encode_any_column(doc, doc_codec, cfg.outer_for("doc_id"))
     elif doc_body is not None:
         # the winning trial body IS the payload — don't encode it twice
-        from .codecs.container import DT_STRING
-
         dbuf = _wrap(STR_CODEC_IDS[doc_codec], doc_body, cfg.outer_for("doc_id"), DT_STRING)
     else:
         dbuf = encode_str_column(doc, doc_codec, outer=cfg.outer_for("doc_id"))
@@ -767,20 +729,19 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
 
     # source: constant within a chunk by construction → dictionary
     tcol = time.perf_counter()
+    src_codec = _coerce_str_codec(cfg.overrides.get("source", "str_dict"))
     if src.null_count:
         from .codecs.container import encode_any_column
 
-        sbuf = encode_any_column(src, _coerce_str_codec(overrides.get("source", "str_dict")), cfg.outer_for("source"))
+        sbuf = encode_any_column(src, src_codec, cfg.outer_for("source"))
     else:
-        sbuf = encode_str_column(src, _coerce_str_codec(overrides.get("source", "str_dict")), outer=cfg.outer_for("source"))
+        sbuf = encode_str_column(src, src_codec, outer=cfg.outer_for("source"))
     src_bytes = int(pc.sum(pc.binary_length(src.drop_null() if src.null_count else src)).as_py() or 0)
     sbp = cfg.bloom_for("source")
     emit("source", sbuf, n_rows, src_bytes, None, "dictionary-encoding-cardinality", tcol,
          null_count=src.null_count, col_bloom=_bloom_of(src, sbp) if sbp else None)
 
     # extra columns: generic registry dispatch
-    from .codecs.container import DTYPE_SPARK
-
     for name in extras:
         tcol = time.perf_counter()
         arr = extra_arrs[name]
@@ -1142,14 +1103,7 @@ def run(
                     "one table — re-encode it (decode + run into a fresh "
                     "out_dir) before appending"
                 )
-            current_fields = {f.name for f in _COLMETA_ARROW}
-            if meta_fields != current_fields:
-                raise ValueError(
-                    f"existing table at {out_dir!r} stores a different "
-                    f"metrics-struct shape ({sorted(meta_fields ^ current_fields)} "
-                    "differ); appending would mix struct schemas — re-encode "
-                    "it into a fresh out_dir first"
-                )
+            _require_current_metrics_struct(stored, "append")
             if extras:
                 from .decode_job import extra_types_of
 
@@ -1262,16 +1216,18 @@ def run(
 
 
 def _require_current_metrics_struct(enc: DataFrame, op: str) -> None:
-    """Selective rewrite/compaction copy kept chunk rows verbatim and then
-    run() re-encodes the rest — a source table with an OLDER metrics struct
-    would pass the copy, then trip run()'s struct-shape guard AFTER dest was
-    wiped, leaving a plausible-looking table that silently lacks the
-    re-encoded chunks. Refuse up front, before any destructive step."""
+    """Refuse to mix metrics-struct schemas in one table. run() checks it
+    before appending; selective rewrite/compaction copy kept chunk rows
+    verbatim and then run() re-encodes the rest — a source table with an
+    OLDER metrics struct would pass the copy, then trip run()'s guard AFTER
+    dest was wiped, leaving a plausible-looking table that silently lacks
+    the re-encoded chunks. They check up front, before any destructive
+    step."""
     meta_fields = set(enc.schema["columns"].dataType.elementType.fieldNames())
     current = {f.name for f in _COLMETA_ARROW}
     if meta_fields != current:
         raise ValueError(
-            f"source table stores a different metrics-struct shape "
+            f"the table stores a different metrics-struct shape "
             f"({sorted(meta_fields ^ current)} differ); {op} would mix struct "
             "schemas — re-encode the table (decode + run into a fresh "
             "out_dir) first"

@@ -34,7 +34,7 @@ from .chunking import (
     plan_buckets,
 )
 from .plan import EncodeConfig, Prescription, plan_from_decisions
-from .select import estimate_dictionary_payload_bytes, select_codec
+from .select import estimate_dictionary_payload_bytes
 from .stats import compute_chunk_stats, extrapolate_stats
 
 LINT_SCHEMA = (
@@ -62,6 +62,10 @@ def lint_chunk(
 ) -> pa.Table:
     """Stats + selection over one chunk's sampled rows → decision rows.
 
+    Every column's codec comes from the encoder's own decision helpers
+    (`encode_job._choose_num` / `_choose_str`), so on the same rows lint
+    and encode pick the same codec; they differ only through sampling.
+
     `fraction` is the row-sampling rate the rows arrived at; stats are
     extrapolated to full-chunk magnitudes before the cost model so that
     fixed codec costs (dict/FSST tables) amortize the way they will in the
@@ -73,7 +77,19 @@ def lint_chunk(
     replays (order-sensitive quantities like run_ratio would otherwise
     depend on shuffle arrival order)."""
     from .codecs import encode_int_column
-    from .codecs.container import _outer_compress
+    from .codecs.container import (
+        DT_DECIMAL128,
+        DT_INT32,
+        _outer_compress,
+        dtype_of_arrow,
+        int_view_of,
+        is_string_kind,
+        is_wide,
+    )
+    from .codecs.intcodecs import INT_CODEC_IDS, encode_int_body
+    from .codecs.strcodecs import STR_CODEC_IDS, encode_str_body
+    from .encode_job import _choose_num, _choose_str, extra_columns_of
+    from .select import Decision
 
     cfg = cfg or EncodeConfig()
     t = (t.sort_by("doc_id") if full_stats else t).combine_chunks()
@@ -140,34 +156,16 @@ def lint_chunk(
 
     for column, values, nv in (("tokens", flat, len(flat)), ("n_tok", lens, n_rows)):
         st = extrapolate_stats(compute_chunk_stats(values, n_rows, full=full_stats), fraction)
-        d = select_codec(
-            values, st, forced=cfg.overrides.get(column),
-            allow_dict=f"!dict:{column}" not in cfg.overrides,
-            dict_page_limit=cfg.dict_limit_for(column),
-        )
+        d = _choose_num(values, st, DT_INT32, column, cfg)
         # R2 inputs: real sampled encode body + bounded zstd-3 trial ratio
         # (the reference samples one row group, column_context.rs:543)
         body = encode_int_column(values, d.codec, outer="none")
         emit(column, st, d, body, nv)
 
     # extra columns: the reference lints EVERY leaf column of a flat schema
-    # (lib.rs:18-46 over column_context.rs:213-292); same dispatch as the
-    # encoder's generic registry, stats-only depth
-    from .encode_job import _pick_str_codec, extra_columns_of
-    from .select import Decision, select_float_codec
-
+    # (lib.rs:18-46 over column_context.rs:213-292); the encoder's own
+    # decision helpers, stats-only depth
     for name in extra_columns_of(t.schema.names):
-        from .codecs.container import (
-            DT_BOOL,
-            DT_FLOAT32,
-            DT_FLOAT64,
-            dtype_of_arrow,
-            int_view_of,
-            is_string_kind,
-            is_wide,
-        )
-        from .codecs.strcodecs import STR_CODEC_IDS, encode_str_body
-
         arr = t.column(name)
         arr = arr.chunk(0) if arr.num_chunks else pa.array([], t.schema.field(name).type)
         # list extras lint over their FLATTENED element stream (the tokens
@@ -182,50 +180,16 @@ def lint_chunk(
         dtype = dtype_of_arrow(arr.type)
         valid = arr.drop_null() if arr.null_count else arr
         if is_string_kind(dtype):
-            from .codecs.container import DT_FIXED_BINARY
-
-            # same cast the encode trial race applies: fixed-size binary
-            # holds arbitrary bytes — a large_string cast crashes on
-            # non-UTF-8 payloads the encoder accepts
-            trial = (
-                valid.cast(pa.large_binary()) if dtype == DT_FIXED_BINARY else valid
-            )
-            forced_s = cfg.overrides.get(name)
-            if forced_s:
-                from .encode_job import _coerce_str_codec
-
-                codec, body, rule = _coerce_str_codec(forced_s), None, "forced"
-            else:
-                codec, body, rule = _pick_str_codec(
-                    trial, allow_dict=f"!dict:{name}" not in cfg.overrides
-                )
+            codec, body, rule, trial = _choose_str(valid, dtype, name, cfg)
             if body is None:
                 body = encode_str_body(STR_CODEC_IDS[codec], trial)
             emit(name, None, Decision(codec, len(body), rule), body, nv)
             continue
         view = int_view_of(valid, dtype) if len(valid) else np.empty(0, np.int32)
-        wide = is_wide(dtype)
         st = extrapolate_stats(compute_chunk_stats(view, n_rows, full=full_stats), fraction)
-        if dtype == DT_BOOL:
-            d = Decision("for", (st.n_values + 7) // 8, "bool-bitpack")
-        elif dtype in (DT_FLOAT32, DT_FLOAT64):
-            d = select_float_codec(
-                view, st, forced=cfg.overrides.get(name), wide=wide,
-                allow_dict=f"!dict:{name}" not in cfg.overrides,
-                dict_page_limit=cfg.dict_limit_for(name),
-            )
-        else:
-            d = select_codec(
-                view, st, forced=cfg.overrides.get(name),
-                allow_dict=f"!dict:{name}" not in cfg.overrides,
-                dict_page_limit=cfg.dict_limit_for(name),
-                wide=wide,
-            )
-        from .codecs.intcodecs import INT_CODEC_IDS, encode_int_body
-
+        d = _choose_num(view, st, dtype, name, cfg)
+        wide = is_wide(dtype)
         body = encode_int_body(INT_CODEC_IDS[d.codec], view, wide=wide)
-        from .codecs.container import DT_DECIMAL128
-
         emit(name, st, d, body, nv,
              elem_bytes=16 if dtype == DT_DECIMAL128 else 8 if wide else 4)
     return pa.Table.from_pylist(rows)
@@ -392,8 +356,9 @@ def lint(
 def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Prescription:
     """Collapse per-chunk decisions to a per-column prescription: majority
     codec per column (the reference's most_frequent property inference,
-    fix.rs:196-211) plus the R2 outer-codec majority vote (outer_policy.py),
-    emitted in the same `set column …` DSL.
+    fix.rs:196-211, tie → the smaller codec name) plus the R2 outer-codec
+    majority vote (outer_policy.py), the R10 small-pages and R1 dictionary
+    page directives, emitted in the same `set column …` DSL.
 
     Sampled body bytes are rescaled to full-data magnitudes so the
     reference's absolute size thresholds (8 MB column floor, 4 MB speed
@@ -401,59 +366,81 @@ def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Pre
     own per-chunk `sample_fraction` (the two passes sample at different
     depths) and are divided by it automatically; `scale` multiplies on top
     (useful to emulate a larger corpus in tests, default 1.0 — callers no
-    longer pass 1/fraction). Both votes are Spark aggregates: one row per
-    column reaches the driver."""
-    from pyspark.sql import Window, functions as F
+    longer pass 1/fraction).
+
+    ONE Spark aggregate per (column, codec) — O(#columns × #codecs) rows
+    reach the driver — and every rule is folded from it on the driver, the
+    same shape as `encode_job.plan_from_encoded`. Directives come out by
+    family (encoding, compression, data_page_size_limit,
+    dictionary_page_size_limit, file max_chunk_rows), columns sorted within
+    each."""
+    from pyspark.sql import functions as F
 
     from . import outer_policy as OP
-    from .plan import Directive
-
-    w = Window.partitionBy("column").orderBy(F.desc("count"), "codec")
-    majority = (
-        decisions.groupBy("column", "codec")
-        .count()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("column", "codec")
-        .collect()
+    from .plan import R10_PAGE_BYTES, Directive
+    from .select import (
+        DICT_PAGE_SIZE_MAX,
+        DICT_PAGE_SIZE_START,
+        suggested_dictionary_page_size_limit,
+        suggested_max_chunk_rows,
     )
-    rx = plan_from_decisions([{"column": r["column"], "codec": r["codec"]} for r in majority])
 
     b = F.col("body_bytes") * F.lit(float(scale))
+    # payload estimates are full-chunk magnitudes (lint_chunk extrapolates
+    # stats), so R1's current-rows input must be full-chunk too — raw
+    # sample_rows would shrink ~fraction× more than needed
+    rows = F.col("sample_rows").cast("double")
     if "sample_fraction" in decisions.columns:
         b = b / F.col("sample_fraction")
+        rows = rows / F.col("sample_fraction")
     vote = (
         F.when(F.col("outer_ratio") > OP.RATIO_SKIP, F.lit("none"))
         .when(b > OP.SPEED_THRESHOLD_BYTES, F.lit("lz4"))
         .otherwise(F.lit("zstd"))
     )
-    agg = (
-        decisions.groupBy("column")
+    groups = (
+        decisions.groupBy("column", "codec")
         .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum(b).alias("total_bytes"),
-            F.max(b).alias("max_chunk_bytes"),
-            (F.sum(b * F.col("outer_ratio")) / F.sum(b)).alias("weighted_ratio"),
-            F.sum(F.when(vote == "lz4", 1).otherwise(0)).alias("lz4_votes"),
-            F.sum(F.when(vote == "zstd", 1).otherwise(0)).alias("zstd_votes"),
+            F.count("*").alias("n"),
+            F.sum(b).alias("b"),
+            F.max(b).alias("max_b"),
+            F.sum(b * F.col("outer_ratio")).alias("b_ratio"),
+            F.sum(F.when(vote == "lz4", 1).otherwise(0)).alias("lz4"),
+            F.sum(F.when(vote == "zstd", 1).otherwise(0)).alias("zstd"),
+            F.sum("sample_values").alias("values"),
+            F.sum("sample_rows").alias("rows"),
+            F.max("dict_payload_bytes").alias("payload"),
+            F.max(rows).alias("max_rows"),
         )
         .collect()
     )
-    for r in sorted(agg, key=lambda r: r["column"]):
-        kind, is_text = OP.COLUMN_KINDS.get(r["column"], (None, None))
+    cols: dict[str, dict] = {}
+    for g in sorted(groups, key=lambda g: (g["column"], g["codec"])):
+        c = cols.setdefault(
+            g["column"],
+            {"codec": g["codec"], "best": 0, "n": 0, "b": 0.0, "max_b": 0.0,
+             "b_ratio": 0.0, "lz4": 0, "zstd": 0, "values": 0, "rows": 0,
+             "payload": 0, "max_rows": 0.0},
+        )
+        # codecs arrive name-sorted, so a strict > keeps the smaller name
+        # on a tie
+        if g["n"] > c["best"]:
+            c["codec"], c["best"] = g["codec"], g["n"]
+        for k in ("n", "b", "b_ratio", "lz4", "zstd", "values", "rows"):
+            c[k] += g[k] or 0
+        for k in ("max_b", "payload", "max_rows"):
+            c[k] = max(c[k], g[k] or 0)
+
+    rx = plan_from_decisions([{"column": k, "codec": c["codec"]} for k, c in sorted(cols.items())])
+    for k, c in sorted(cols.items()):
+        kind, is_text = OP.COLUMN_KINDS.get(k, (None, None))
         v = OP.decide(
-            r["n_chunks"],
-            float(r["total_bytes"] or 0),
-            float(r["max_chunk_bytes"] or 0),
-            float(r["weighted_ratio"] if r["weighted_ratio"] is not None else 1.0),
-            r["lz4_votes"],
-            r["zstd_votes"],
-            column=r["column"],
-            kind=kind,
-            is_text=is_text,
+            c["n"], float(c["b"]), float(c["max_b"]),
+            c["b_ratio"] / c["b"] if c["b"] else 1.0,
+            c["lz4"], c["zstd"], column=k, kind=kind, is_text=is_text,
         )
         if v is not None:
-            rx.directives.append(Directive("column", r["column"], "compression", v))
+            rx.directives.append(Directive("column", k, "compression", v))
 
     # R10 vector-embedding page-size (vector_embedding.rs:19-76): a list
     # extra averaging ≥ 64 values/row gets the small-pages directive — a
@@ -463,23 +450,10 @@ def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Pre
     # column can never reach 64× rows, so the threshold implies list-ness.
     # `tokens` is excluded by design: its flat stream is offset-addressed
     # through n_tok, not block-indexed (engine divergence, documented).
-    from .plan import R10_PAGE_BYTES
-
-    fan = (
-        decisions.filter(F.col("column") != "tokens")
-        .groupBy("column")
-        .agg(
-            (
-                F.sum("sample_values")
-                / F.greatest(F.sum("sample_rows"), F.lit(1))
-            ).alias("avg_fanout")
-        )
-        .collect()
-    )
-    for r in sorted(fan, key=lambda r: r["column"]):
-        if r["avg_fanout"] is not None and r["avg_fanout"] >= 64:
+    for k, c in sorted(cols.items()):
+        if k != "tokens" and c["values"] / max(c["rows"], 1) >= 64:
             rx.directives.append(
-                Directive("column", r["column"], "data_page_size_limit", str(R10_PAGE_BYTES))
+                Directive("column", k, "data_page_size_limit", str(R10_PAGE_BYTES))
             )
 
     # R1 growth flow (dictionary_encoding.rs:155-240): where dictionary wins
@@ -487,53 +461,23 @@ def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Pre
     # (2 MB doubling ≤16 MB); if even 16 MB can't hold it, shrink chunks
     # instead. NDV-based payloads don't scale linearly with the sample, so
     # the sampled maximum is used as-is (growth is by powers of two anyway).
-    from .select import (
-        DICT_PAGE_SIZE_MAX,
-        DICT_PAGE_SIZE_START,
-        suggested_dictionary_page_size_limit,
-        suggested_max_chunk_rows,
-    )
-
-    dict_cols = {
-        r["column"]
-        for r in majority
-        if r["codec"] in ("dict", "str_dict")
-    }
-    if dict_cols:
-        # payload estimates are full-chunk magnitudes (lint_chunk extrapolates
-        # stats), so the shrink's current-rows input must be full-chunk too —
-        # raw sample_rows would shrink ~fraction× more than needed
-        rows_expr = F.col("sample_rows").cast("double")
-        if "sample_fraction" in decisions.columns:
-            rows_expr = rows_expr / F.col("sample_fraction")
-        pay = (
-            decisions.filter(F.col("column").isin(list(dict_cols)))
-            .groupBy("column")
-            .agg(F.max("dict_payload_bytes").alias("payload"), F.max(rows_expr).alias("rows"))
-            .collect()
-        )
-        # a file-level max_chunk_rows shrink must fold MIN across columns:
-        # apply()'s last-wins would otherwise keep the lexicographically
-        # last overflower's (looser) shrink and leave the tighter column's
-        # dictionary still over the page cap at encode time
-        min_shrink: int | None = None
-        for r in sorted(pay, key=lambda r: r["column"]):
-            payload = int(r["payload"] or 0)
-            if payload <= DICT_PAGE_SIZE_START:
-                continue
-            limit = suggested_dictionary_page_size_limit(payload)
-            if limit is not None:
-                rx.directives.append(
-                    Directive("column", r["column"], "dictionary_page_size_limit", str(limit))
-                )
-            else:
-                shrink = suggested_max_chunk_rows(int(r["rows"]), payload, DICT_PAGE_SIZE_MAX)
-                min_shrink = shrink if min_shrink is None else min(min_shrink, shrink)
-                rx.directives.append(
-                    Directive("column", r["column"], "dictionary_page_size_limit", str(DICT_PAGE_SIZE_MAX))
-                )
-        if min_shrink is not None:
-            rx.directives.append(Directive("file", None, "max_chunk_rows", str(min_shrink)))
+    # A file-level max_chunk_rows shrink folds MIN across columns: apply()'s
+    # last-wins would otherwise keep the lexicographically last overflower's
+    # (looser) shrink and leave the tighter column's dictionary still over
+    # the page cap at encode time.
+    min_shrink: int | None = None
+    for k, c in sorted(cols.items()):
+        payload = int(c["payload"])
+        if c["codec"] not in ("dict", "str_dict") or payload <= DICT_PAGE_SIZE_START:
+            continue
+        limit = suggested_dictionary_page_size_limit(payload)
+        if limit is None:
+            shrink = suggested_max_chunk_rows(int(c["max_rows"]), payload, DICT_PAGE_SIZE_MAX)
+            min_shrink = shrink if min_shrink is None else min(min_shrink, shrink)
+            limit = DICT_PAGE_SIZE_MAX
+        rx.directives.append(Directive("column", k, "dictionary_page_size_limit", str(limit)))
+    if min_shrink is not None:
+        rx.directives.append(Directive("file", None, "max_chunk_rows", str(min_shrink)))
     return rx
 
 

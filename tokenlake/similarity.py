@@ -342,7 +342,9 @@ def min_label_components(
         pairs.select(F.col("y").alias("x"), F.col("x").alias("y"))
     ).localCheckpoint()
     labels = ids.withColumn("lbl", F.col("x")).localCheckpoint()
-    for _ in range(max_iter):
+    # max_iter updates plus one confirming probe: labels that settle on
+    # the last allowed update are converged, not a failure
+    for i in range(max_iter + 1):
         prop = edges.join(labels, "x").select(F.col("y").alias("x"), "lbl")
         new = (
             labels.unionByName(prop)
@@ -357,20 +359,20 @@ def min_label_components(
             .limit(1)
             .count()
         )
-        labels = new
         if changed == 0:
             break
-    else:
-        # exiting via max_iter with labels still moving means a component's
-        # diameter exceeds the bound — the labels are WRONG (partial
-        # propagation), and silently returning them hands callers incorrect
-        # dedup clusters with no signal (r6 advice). Fail loudly; callers
-        # with genuinely deep graphs raise max_iter.
-        raise RuntimeError(
-            f"min_label_components did not converge in max_iter={max_iter} "
-            "rounds (labels still changing — a component's diameter exceeds "
-            "the bound); raise max_iter for deep graphs"
-        )
+        if i == max_iter:
+            # labels still moving past max_iter means a component's
+            # diameter exceeds the bound — the labels are WRONG (partial
+            # propagation), and silently returning them hands callers
+            # incorrect dedup clusters with no signal (r6 advice). Fail
+            # loudly; callers with genuinely deep graphs raise max_iter.
+            raise RuntimeError(
+                f"min_label_components did not converge in max_iter={max_iter} "
+                "rounds (labels still changing — a component's diameter exceeds "
+                "the bound); raise max_iter for deep graphs"
+            )
+        labels = new
     return (
         labels.groupBy(F.col("lbl").alias("cluster"))
         .agg(
