@@ -19,16 +19,18 @@ def _df(spark, scale=0.01, profiles=("lowcard",), skew=False):
 
 # ------------------------------------------ compact dest/src overlap guard
 
-def test_compact_refuses_in_place_and_nested_dirs(spark, tmp_path):
+@pytest.mark.parametrize("op", ["compact", "rewrite_from_evidence"])
+def test_compact_refuses_in_place_and_nested_dirs(spark, tmp_path, op):
     """An in-place `compact out/ -o out/` (or nested dest) would wipe the
-    source table before copying anything — must refuse up front."""
+    source table before copying anything — both dest-replacing ops must
+    refuse up front."""
     out = str(tmp_path / "out")
     encode_job.run(spark, _df(spark), out, resume=False)
     for dest in (out, out + "/", f"{out}/sub", str(tmp_path)):
         with pytest.raises(ValueError, match="overlaps"):
-            encode_job.compact(spark, out, dest)
+            getattr(encode_job, op)(spark, out, dest)
     # a disjoint sibling dir is fine
-    encode_job.compact(spark, out, str(tmp_path / "out2"))
+    getattr(encode_job, op)(spark, out, str(tmp_path / "out2"))
 
 
 # ------------------------------------------ X1: statistics none + bloom true

@@ -318,6 +318,25 @@ def test_evidence_compression_enable_loop(spark, tmp_path):
     df.unpersist()
 
 
+def test_cli_evidence_dry_run_lists_compression_verdicts(spark, tmp_path, capsys):
+    """`rewrite --from-evidence --dry-run` lists every verdict the rewrite
+    acts on — on the enable-loop table that includes the tokens column's
+    enable-compression verdicts — and writes nothing."""
+    from tokenlake import cli
+    from tokenlake.plan import Prescription
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    cfg = Prescription.parse("set column tokens compression uncompressed").apply()
+    encode_job.run(spark, _df(spark, scale=0.02), src, cfg=cfg, resume=False)
+
+    argv = ["rewrite", src, "-o", dst, "--from-evidence", "--dry-run"]
+    assert cli.main(argv, spark=spark) == 0
+    rules = [line.split()[1] for line in capsys.readouterr().out.splitlines()]
+    assert "enable-compression" in rules
+    assert set(rules) <= set(encode_job.REWRITE_RULES)
+    assert not os.path.exists(dst)
+
+
 def test_evidence_compression_disable_loop(spark, tmp_path):
     """The R3 side: a FORCED outer on data whose whole pipeline buys <5%
     (high-entropy tokens under forced zlib) → disable-compression verdict

@@ -105,3 +105,40 @@ def test_get_spark_rejects_malformed_env_by_name(monkeypatch, var, value):
     monkeypatch.setenv(var, value)
     with pytest.raises(ValueError, match=var):
         get_spark()
+
+
+_SPARK_COMMANDS = [
+    ["lint", "in"],
+    ["rewrite", "in", "-o", "out"],
+    ["decode", "in", "-o", "out"],
+    ["verify", "ref", "enc"],
+    ["compact", "in", "-o", "out"],
+    ["lint-encoded", "in"],
+    ["lookup", "in", "d1"],
+    ["scan", "in"],
+    ["curate", "in", "--eval", "ev", "-o", "out"],
+]
+
+
+@pytest.mark.parametrize("argv", _SPARK_COMMANDS, ids=lambda a: a[0])
+def test_cli_cpus_defaults_to_the_host(monkeypatch, argv):
+    # no --cpus ⇒ get_spark picks the host default (master=None), so the CLI
+    # never runs local[8] on a smaller host; an explicit --cpus still pins it
+    from tokenlake import cli, session
+
+    masters = []
+
+    class _Session:
+        sparkContext = type("_Ctx", (), {"setLogLevel": lambda self, level: None})()
+
+    def fake_get_spark(master=None, app_name="tokenlake", shuffle_partitions=None):
+        masters.append(master)
+        return _Session()
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    parser = cli._build_parser()
+    for extra, want in (([], None), (["--cpus", "2"], "local[2]")):
+        args = parser.parse_args(argv + extra)
+        assert args.cpus == (None if want is None else 2)
+        _, own = cli._get_spark(None, args.cpus)
+        assert own and masters[-1] == want

@@ -36,6 +36,7 @@ needs its own reader and its north rule demands a bit-identity gate):
 from __future__ import annotations
 
 import argparse
+import functools
 import http.client as _http_client
 import json
 import sys
@@ -46,8 +47,13 @@ SEVERITY_RANK = {"suggestion": 0, "warning": 1, "error": 2}
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="tokenlake")
     sub = p.add_subparsers(dest="command", required=True)
+    # shared by every Spark-backed subcommand; None lets get_spark size the
+    # local master to the host (SPARK_GRAFT_CPUS, else the usable CPU count)
+    spark_args = argparse.ArgumentParser(add_help=False)
+    spark_args.add_argument("--cpus", type=int, default=None, help="local Spark cores")
+    spark_cmd = functools.partial(sub.add_parser, parents=[spark_args])
 
-    lint = sub.add_parser("lint", help="sampled plan-only analysis of a sequences parquet")
+    lint = spark_cmd("lint", help="sampled plan-only analysis of a sequences parquet")
     lint.add_argument("input")
     lint.add_argument(
         "--format", default="parquet", choices=["parquet", "iceberg"],
@@ -61,9 +67,8 @@ def _build_parser() -> argparse.ArgumentParser:
         help="print only diagnostics at or above this level",
     )
     lint.add_argument("--prescription-out", default=None)
-    lint.add_argument("--cpus", type=int, default=8)
 
-    rw = sub.add_parser("rewrite", help="lint-and-fix: encode with the merged prescription")
+    rw = spark_cmd("rewrite", help="lint-and-fix: encode with the merged prescription")
     rw.add_argument("input")
     rw.add_argument(
         "--format", default="parquet", choices=["parquet", "iceberg"],
@@ -75,9 +80,10 @@ def _build_parser() -> argparse.ArgumentParser:
     rw.add_argument(
         "--from-evidence", action="store_true",
         help="INPUT is an ENCODED table dir: re-encode only the chunks whose "
-        "stored-evidence lint flags enable/disable-dictionary, copying every "
-        "other chunk byte-identically (the lint→rewrite lifecycle on the "
-        "engine's own format)",
+        "stored-evidence lint flags enable/disable-dictionary or "
+        "enable/disable-compression, copying every other chunk "
+        "byte-identically (the lint→rewrite lifecycle on the engine's own "
+        "format); --dry-run lists those verdicts",
     )
     rw.add_argument("--dry-run", action="store_true")
     rw.add_argument("--fraction", type=float, default=0.05)
@@ -91,39 +97,35 @@ def _build_parser() -> argparse.ArgumentParser:
         help="also write the merged prescription DSL to FILE "
         "(reference `--export-prescription`, cli/main.rs:53-54)",
     )
-    rw.add_argument("--cpus", type=int, default=8)
 
-    dec = sub.add_parser("decode", help="decode an encoded table back to sequences parquet")
+    dec = spark_cmd("decode", help="decode an encoded table back to sequences parquet")
     dec.add_argument("input", help="encoded output dir (as written by rewrite)")
     dec.add_argument("-o", "--out", required=True)
     dec.add_argument(
         "--columns", default=None,
         help="comma-separated projection, e.g. tokens,n_tok (default: all)",
     )
-    dec.add_argument("--cpus", type=int, default=8)
     dec.add_argument(
         "--local", action="store_true",
         help="decode in-process with pyarrow (no Spark/JVM; one process, one "
         "machine — for small tables, notebooks, and format cross-checks)",
     )
 
-    ver = sub.add_parser("verify", help="bit-identity gate: decoded vs reference sequences")
+    ver = spark_cmd("verify", help="bit-identity gate: decoded vs reference sequences")
     ver.add_argument("reference", help="original sequences parquet")
     ver.add_argument("encoded", help="encoded output dir")
     ver.add_argument(
         "--exact", action="store_true",
         help="full-outer-join per-row certificate (default: per-source hash digest)",
     )
-    ver.add_argument("--cpus", type=int, default=8)
 
-    cp = sub.add_parser("compact", help="merge undersized chunks of an encoded table")
+    cp = spark_cmd("compact", help="merge undersized chunks of an encoded table")
     cp.add_argument("input", help="encoded table dir (source; never mutated)")
     cp.add_argument("-o", "--out", required=True, help="destination encoded table dir")
     cp.add_argument("--min-rows", type=int, default=None,
                     help="chunks under this row count are merged (default: half the row cap)")
-    cp.add_argument("--cpus", type=int, default=8)
 
-    le = sub.add_parser(
+    le = spark_cmd(
         "lint-encoded",
         help="R1 evidence tier over a stored table: classify dictionary "
         "status from the actual chunk encodings (metrics-only, no sampling)",
@@ -133,9 +135,8 @@ def _build_parser() -> argparse.ArgumentParser:
         "--severity", default="suggestion", choices=list(SEVERITY_RANK),
         help="print only diagnostics at or above this level",
     )
-    le.add_argument("--cpus", type=int, default=8)
 
-    lk = sub.add_parser(
+    lk = spark_cmd(
         "lookup",
         help="point lookup: decode only the chunks that can contain the "
         "requested doc ids (candidate derivation + doc_id bloom pruning)",
@@ -143,9 +144,8 @@ def _build_parser() -> argparse.ArgumentParser:
     lk.add_argument("input", help="encoded table dir")
     lk.add_argument("doc_ids", help="comma-separated doc ids")
     lk.add_argument("-o", "--out", default=None, help="write results as parquet (default: print)")
-    lk.add_argument("--cpus", type=int, default=8)
 
-    sc = sub.add_parser(
+    sc = spark_cmd(
         "scan",
         help="value scan over a stored table: --token probes the token "
         "membership filters; --range COL LO HI prunes on the per-chunk "
@@ -160,9 +160,8 @@ def _build_parser() -> argparse.ArgumentParser:
         "2026-08-17T12:00:00[+00:00] → timestamp, 12:34:56 → time)",
     )
     sc.add_argument("-o", "--out", default=None, help="write results as parquet (default: count)")
-    sc.add_argument("--cpus", type=int, default=8)
 
-    cu = sub.add_parser(
+    cu = spark_cmd(
         "curate",
         help="token-level curation funnel: drop eval-contaminated docs, "
         "then docs whose duplicated-span fraction exceeds the threshold "
@@ -186,7 +185,6 @@ def _build_parser() -> argparse.ArgumentParser:
                     "whose duplicate-bigram fraction exceeds this")
     cu.add_argument("--encoded", action="store_true",
                     help="input is an encoded tokenlake table (projected decode)")
-    cu.add_argument("--cpus", type=int, default=8)
 
     ft = sub.add_parser(
         "fetch",
@@ -202,12 +200,14 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _get_spark(spark, cpus: int):
+def _get_spark(spark, cpus: int | None):
     if spark is not None:
         return spark, False
     from .session import get_spark
 
-    s = get_spark(master=f"local[{cpus}]", app_name="tokenlake-cli")
+    s = get_spark(
+        master=None if cpus is None else f"local[{cpus}]", app_name="tokenlake-cli"
+    )
     s.sparkContext.setLogLevel("ERROR")
     return s, True
 
@@ -297,8 +297,9 @@ def cmd_rewrite(args, spark=None) -> int:
             if args.dry_run:
                 from pyspark.sql import functions as F
 
+                # every verdict the real rewrite acts on, not just dictionary
                 ev = lint_job.lint_encoded(spark, args.input).filter(
-                    F.col("rule").isin("enable-dictionary", "disable-dictionary")
+                    F.col("rule").isin(*encode_job.REWRITE_RULES)
                 )
                 for r in ev.collect():
                     print(f"{r['severity']:<10} {r['rule']:<20} {r['chunk_id']}:{r['column']}")

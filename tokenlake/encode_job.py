@@ -1172,22 +1172,7 @@ def run(
     # each attempt writes its own partition dir so the lineage derivation
     # below re-reads ONLY this attempt's files — at 10^12 rows re-reading the
     # whole encoded table per resume would be a full extra scan
-    # Cap each encoded file at 8 chunk rows (~64 MB at default chunk caps):
-    # decode-scan parallelism and file-level chunk_id pruning then track
-    # CHUNK count, not reducer count. With unbounded files one reducer's
-    # whole output landed in a single parquet row group (parquet-mr only
-    # re-checks its block size every ≥100 rows — far above our multi-MB
-    # chunk rows — so the 128 MB/8 MB block settings never trigger), which
-    # capped decode parallelism at the file count and made lookups read past
-    # every co-resident chunk. 8 × ~8 MB files stay well above the
-    # small-file zone even at 10^6-chunk scale (~10^5 files).
-    # uncompressed parquet for the encoded table: payload columns are the
-    # bytes (already codec+outer compressed — snappy on top saves ~nothing
-    # and costs a full (de)compression pass on every write AND every later
-    # scan); the metrics columns are a rounding error of the file
-    encoded.write.mode("append").option("maxRecordsPerFile", 8).option(
-        "compression", "uncompressed"
-    ).parquet(f"{enc_path}/attempt={attempt}")
+    _write_chunks(encoded, f"{enc_path}/attempt={attempt}", "append")
     # lineage is derived from the committed encoded table (checkpoint follows
     # data; a crash between the two writes only re-encodes, never corrupts).
     # Explicit schema: a fully-skipped resume writes zero data files, which
@@ -1215,14 +1200,37 @@ def run(
     }
 
 
+def _write_chunks(df: DataFrame, path: str, mode: str) -> None:
+    """The one writer of encoded chunk rows (run()'s attempt dirs and the
+    verbatim copy of kept chunks).
+
+    Each file holds at most 8 chunk rows (~64 MB at default chunk caps):
+    decode-scan parallelism and file-level chunk_id pruning then track
+    CHUNK count, not reducer count. With unbounded files one reducer's
+    whole output landed in a single parquet row group (parquet-mr only
+    re-checks its block size every ≥100 rows — far above our multi-MB
+    chunk rows — so the 128 MB/8 MB block settings never trigger), which
+    capped decode parallelism at the file count and made lookups read past
+    every co-resident chunk. 8 × ~8 MB files stay well above the
+    small-file zone even at 10^6-chunk scale (~10^5 files).
+
+    The parquet is uncompressed: payload columns are the bytes, already
+    codec+outer compressed — snappy on top saves ~nothing and costs a full
+    (de)compression pass on every write AND every later scan; the metrics
+    columns are a rounding error of the file."""
+    df.write.mode(mode).option("maxRecordsPerFile", 8).option(
+        "compression", "uncompressed"
+    ).parquet(path)
+
+
 def _require_current_metrics_struct(enc: DataFrame, op: str) -> None:
     """Refuse to mix metrics-struct schemas in one table. run() checks it
-    before appending; selective rewrite/compaction copy kept chunk rows
-    verbatim and then run() re-encodes the rest — a source table with an
-    OLDER metrics struct would pass the copy, then trip run()'s guard AFTER
-    dest was wiped, leaving a plausible-looking table that silently lacks
-    the re-encoded chunks. They check up front, before any destructive
-    step."""
+    before appending; compact and rewrite_from_evidence copy kept chunk
+    rows verbatim and then run() re-encodes the rest — a source table with
+    an OLDER metrics struct would pass the copy, then trip run()'s guard
+    AFTER dest was wiped, leaving a plausible-looking table that silently
+    lacks the re-encoded chunks. _open_source checks it up front, before
+    any destructive step."""
     meta_fields = set(enc.schema["columns"].dataType.elementType.fieldNames())
     current = {f.name for f in _COLMETA_ARROW}
     if meta_fields != current:
@@ -1234,6 +1242,124 @@ def _require_current_metrics_struct(enc: DataFrame, op: str) -> None:
         )
 
 
+def _open_source(spark: SparkSession, src_dir: str, dest_dir: str, op: str) -> DataFrame:
+    """The deduped source table of a dest-replacing op (`compact`,
+    `rewrite`), refused before any destructive step when it cannot be
+    rewritten safely.
+
+    dest must be disjoint from src: the op wipes dest up front, so an
+    in-place invocation (`compact out/ -o out/`) — or a dest nested inside
+    src (or vice versa) — would delete the source table before anything is
+    copied, despite the "never mutates src_dir" contract. A source with an
+    older metrics struct is refused too (_require_current_metrics_struct)."""
+    import os
+
+    from .decode_job import dedup_attempts, read_encoded
+
+    s = os.path.abspath(src_dir).rstrip("/")
+    d = os.path.abspath(dest_dir).rstrip("/")
+    if s == d or d.startswith(s + "/") or s.startswith(d + "/"):
+        raise ValueError(
+            f"{op} dest_dir {dest_dir!r} overlaps src_dir {src_dir!r}; "
+            f"{op} replaces dest and must never touch src"
+        )
+    enc = dedup_attempts(read_encoded(spark, src_dir))
+    _require_current_metrics_struct(enc, op)
+    return enc
+
+
+def _copy_kept_reencode_rest(
+    spark: SparkSession,
+    src_dir: str,
+    dest_dir: str,
+    enc: DataFrame,
+    kept: DataFrame,
+    groups: list[tuple[DataFrame, EncodeConfig, str]],
+    max_rows: int,
+    max_values: int,
+) -> None:
+    """Replace dest_dir with the `kept` chunk rows of `enc`, copied
+    verbatim, plus every `(part, cfg, salt_prefix)` group re-encoded — the
+    preserve-untouched rewrite (fix.rs:25-70) at CHUNK granularity.
+
+    - dest is wiped first: a prior (possibly crashed) run's attempt=2 files
+      would survive the attempt=1 overwrite, and the re-encode would then
+      APPEND a second copy of every re-encoded chunk at the same
+      (chunk_id, attempt) — a duplicate dedup_attempts cannot remove.
+    - kept chunks are a scan→write with no shuffle: payload bytes stay
+      byte-identical and their lineage rows are carried over.
+    - each group's rows are decoded (shuffle-free mapInArrow), persisted —
+      run() aggregates them once for bucket planning and again through the
+      encode shuffle — and re-encoded through run() under the salt
+      `{salt_prefix}{digest:08x}`, the digest summed over the group's chunk
+      ids. An unsalted or fixed-salt re-encode could re-derive a chunk id
+      that collides with a kept chunk of the same source (bucket numbering
+      restarts at 0 over the group) or with one from an earlier pass, and
+      dedup_attempts would then silently drop one of two different chunks.
+      The digest makes a re-run of the same pass derive the same ids
+      (resume-safe); distinct prefixes keep groups apart even under digest
+      collisions. Lookups stay exact: candidates are re-derived per
+      (prefix, nbuckets) row, as for streaming-salted chunks.
+    """
+    from pyspark import StorageLevel
+
+    from .decode_job import decode_dataframe, extra_types_of
+
+    dest_path = spark._jvm.org.apache.hadoop.fs.Path(dest_dir)
+    fs = dest_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(dest_path):
+        fs.delete(dest_path, True)
+
+    body_cols = [c for c in enc.columns if c != "attempt"]
+    _write_chunks(kept.select(*body_cols), f"{dest_dir}/encoded/attempt=1", "overwrite")
+    # kept ids from the source frame, not a read-back: an empty kept set
+    # writes zero files and schema inference would reject the dir
+    kept_lineage = (
+        spark.read.parquet(f"{src_dir}/lineage")
+        .filter(F.col("status") == "complete")
+        .dropDuplicates(["chunk_id"])
+        # no forced broadcast: a mostly-kept rewrite at the 10^12-row design
+        # point carries an O(#chunks) id set — AQE picks broadcast while it
+        # is small and a shuffled semi-join of key-only rows past that (same
+        # rule as run()'s resume anti-join)
+        .join(kept.select("chunk_id").distinct(), "chunk_id", "left_semi")
+        .withColumn("attempt", F.lit(1))
+    )
+    kept_lineage.write.mode("overwrite").parquet(f"{dest_dir}/lineage")
+
+    extra_types = extra_types_of(enc)
+    for part, cfg, salt_prefix in groups:
+        digest = (
+            part.agg(F.sum(F.xxhash64("chunk_id").cast("decimal(38,0)")).alias("d"))
+            .first()["d"]
+        )
+        rows = decode_dataframe(part, extra_types=extra_types).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        try:
+            run(
+                spark,
+                rows,
+                dest_dir,
+                cfg=cfg,
+                resume=True,
+                max_rows=max_rows,
+                max_values=max_values,
+                salt=f"{salt_prefix}{int(digest or 0) % 0xFFFFFFFF:08x}",
+            )
+        finally:
+            rows.unpersist()
+
+
+# the stored-evidence verdicts rewrite_from_evidence re-encodes on — the
+# full rule-family set: the reference's rewrite applies the FULL merged
+# prescription (cli/main.rs:186-230), not just the dictionary tier
+REWRITE_RULES = (
+    "enable-dictionary", "disable-dictionary",
+    "enable-compression", "disable-compression",
+)
+
+
 def rewrite_from_evidence(
     spark: SparkSession,
     src_dir: str,
@@ -1243,10 +1369,9 @@ def rewrite_from_evidence(
     """Close the evidence→rewrite loop (the reference's lint→rewrite
     lifecycle, cli/main.rs:186-199, applied to the engine's own format at
     CHUNK granularity): re-encode ONLY the chunks whose stored-evidence
-    lint (lint_encoded) says enable-dictionary / disable-dictionary /
-    enable-compression / disable-compression — the full rule-family set,
-    not just the dictionary tier — and copy every other chunk — payloads
-    byte-identical — plus its lineage.
+    lint (lint_encoded) gives one of REWRITE_RULES, and copy every other
+    chunk — payloads byte-identical — plus its lineage, through the same
+    copy-kept / re-encode-rest path as compact (_copy_kept_reencode_rest).
 
     The re-encode FORCES the evidence's verdict — enable-dictionary →
     `dict`, disable-dictionary → the !dict marker — rather than merely
@@ -1256,38 +1381,18 @@ def rewrite_from_evidence(
     released override would loop on the same evidence forever. Chunks are
     grouped by their exact per-column verdict SIGNATURE and each group
     re-encodes with its own forced settings (one pass per distinct
-    signature — no majority-vote compromise across disagreeing chunks).
-    Untouched columns keep their inferred settings (X1 preserve-untouched,
-    fix.rs:25-70).
+    signature, salt prefix `e{i}x` — no majority-vote compromise across
+    disagreeing chunks). Untouched columns keep their inferred settings.
 
-    Re-encoded chunks carry a content-derived salt exactly like
-    compaction: an unsalted re-encode could re-derive a chunk id that
-    collides with a KEPT chunk of the same source (bucket numbering
-    restarts at 0 over the flagged subset), and dedup_attempts would then
-    silently drop one of two different chunks. Lookups stay exact — the
-    candidate derivation already walks every (prefix, nbuckets) group.
-
-    Returns {chunks_total, kept_chunks, rewritten_chunks, flagged_columns}.
+    Returns {chunks_total, kept_chunks, rewritten_chunks, flagged_columns,
+    verdict_groups}.
     """
-    import os
-
-    from .decode_job import (
-        decode_dataframe,
-        dedup_attempts,
-        extra_types_of,
-        read_encoded,
-    )
-    from .lint_job import lint_encoded
-
-    s = os.path.abspath(src_dir).rstrip("/")
-    d = os.path.abspath(dest_dir).rstrip("/")
-    if s == d or d.startswith(s + "/") or s.startswith(d + "/"):
-        raise ValueError(
-            f"rewrite dest_dir {dest_dir!r} overlaps src_dir {src_dir!r}; "
-            "the rewrite replaces dest and must never touch src"
-        )
-
     from pyspark import StorageLevel
+
+    from .lint_job import lint_encoded
+    from .plan import Prescription
+
+    enc = _open_source(spark, src_dir, dest_dir, "rewrite")
 
     # persisted: the verdict frame is consulted several times below (flagged
     # ids, signatures, majority votes, one filter per signature group) and
@@ -1297,15 +1402,7 @@ def rewrite_from_evidence(
     # #flagged-columns) thin verdicts, payload-free.
     ev = (
         lint_encoded(spark, src_dir)
-        .filter(
-            F.col("rule").isin(
-                "enable-dictionary", "disable-dictionary",
-                # round 6: the compression tier's verdicts re-encode too —
-                # the reference's rewrite applies the FULL merged
-                # prescription (cli/main.rs:186-230), not just dictionary
-                "enable-compression", "disable-compression",
-            )
-        )
+        .filter(F.col("rule").isin(*REWRITE_RULES))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     flagged = ev.select("chunk_id").distinct()
@@ -1347,39 +1444,8 @@ def rewrite_from_evidence(
         for col, votes in tally.items()
     }
 
-    enc = dedup_attempts(read_encoded(spark, src_dir))
-    body_cols = [c for c in enc.columns if c != "attempt"]
-    _require_current_metrics_struct(enc, "selective rewrite")
-
-    dest_path = spark._jvm.org.apache.hadoop.fs.Path(dest_dir)
-    fs = dest_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(dest_path):
-        fs.delete(dest_path, True)
-
-    kept = enc.join(flagged, "chunk_id", "left_anti")
-    kept.select(*body_cols).write.mode("overwrite").option(
-        "maxRecordsPerFile", 8
-    ).option("compression", "uncompressed").parquet(
-        f"{dest_dir}/encoded/attempt=1"
-    )
-    kept_ids = kept.select("chunk_id").distinct()
-    kept_lineage = (
-        spark.read.parquet(f"{src_dir}/lineage")
-        .filter(F.col("status") == "complete")
-        .dropDuplicates(["chunk_id"])
-        .join(kept_ids, "chunk_id", "left_semi")
-        .withColumn("attempt", F.lit(1))
-    )
-    kept_lineage.write.mode("overwrite").parquet(f"{dest_dir}/lineage")
-
     base_cfg = plan_from_encoded(spark, src_dir)
-
-    from pyspark import StorageLevel
-
-    from .plan import Prescription
-
-    n_flagged = flagged.count()
-    extra_types = extra_types_of(enc)
+    groups = []
     for i, sig in enumerate(sigs):
         ids = chunk_sigs.filter(
             F.col("sig") == F.array(*[F.lit(e) for e in sig])
@@ -1398,32 +1464,17 @@ def rewrite_from_evidence(
         # forced outer compresses unconditionally (container.wrap), so the
         # enable verdict can't re-fire on any rewritten chunk
         cfg.outer.update(comp_force)
-        # content-derived salt per group (a fixed salt would collide with
-        # kept chunks of the same source — bucket numbering restarts over
-        # the group subset); the group index keeps distinct groups distinct
-        # even under digest collisions, deterministically (sigs is sorted)
-        digest = (
-            enc.join(ids, "chunk_id", "left_semi")
-            .agg(F.sum(F.xxhash64("chunk_id").cast("decimal(38,0)")).alias("d"))
-            .first()["d"]
-        )
-        salt = f"e{i}x{int(digest or 0) % 0xFFFFFFFF:08x}"
-        rows = decode_dataframe(
-            enc.join(ids, "chunk_id", "left_semi"), extra_types=extra_types
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            run(
-                spark,
-                rows,
-                dest_dir,
-                cfg=cfg,
-                resume=True,
-                max_rows=cfg.max_chunk_rows or MAX_CHUNK_ROWS,
-                max_values=max_values,
-                salt=salt,
-            )
-        finally:
-            rows.unpersist()
+        # sigs is sorted, so group i's salt prefix is deterministic
+        groups.append((enc.join(ids, "chunk_id", "left_semi"), cfg, f"e{i}x"))
+
+    n_flagged = flagged.count()
+    _copy_kept_reencode_rest(
+        spark, src_dir, dest_dir, enc,
+        kept=enc.join(flagged, "chunk_id", "left_anti"),
+        groups=groups,
+        max_rows=MAX_CHUNK_ROWS,
+        max_values=max_values,
+    )
 
     total = enc.count()
     ev.unpersist()
@@ -1450,123 +1501,43 @@ def compact(
     Streaming ingest salts chunk ids per micro-batch (streaming.py), so a
     long-lived table accumulates many tiny chunks — the "too many small row
     groups" half of the reference's page/row-group-size rule
-    (page_size.rs:19-115) applied to the engine's own format. Compaction is
-    the preserve-untouched idea (fix.rs:25-70) at CHUNK granularity:
+    (page_size.rs:19-115) applied to the engine's own format. Compaction
+    keeps every other chunk and re-encodes the undersized ones through the
+    same copy-kept / re-encode-rest path as rewrite_from_evidence
+    (_copy_kept_reencode_rest, one group, salt prefix `c`):
 
     - undersized = `n_rows < min_rows AND n_values < max_values/2`, decided
       from the metrics columns alone (no payload read); both caps are
       checked because a chunk can be row-small yet token-full, and
       re-encoding it would buy nothing.
     - kept chunks are copied verbatim — payload bytes byte-identical, their
-      lineage rows carried over — via a scan→write with no shuffle.
-    - undersized chunks are decoded (shuffle-free mapInArrow) and re-encoded
-      through the normal checkpointed path under a per-pass salt (chunk ids
-      from different passes/batches must never collide), with the table's
-      codec/outer/bloom/statistics preserved via plan_from_encoded unless an
-      explicit cfg overrides them. The salted re-encode keeps doc lookups
-      exact: candidates are re-derived per (prefix, nbuckets) row, the same
-      mechanism streaming-salted chunks already rely on.
+      lineage rows carried over.
+    - undersized chunks are decoded and re-encoded through the normal
+      checkpointed path, with the table's codec/outer/bloom/statistics
+      preserved via plan_from_encoded unless an explicit cfg overrides them.
 
     Writes a fresh encoded table at dest_dir; never mutates src_dir (a crash
     mid-compact leaves the source intact; re-running overwrites dest).
     Returns {chunks_before, kept_chunks, merged_chunks, chunks_after,
     bytes_before, bytes_after}.
     """
-    import os
-
-    from .decode_job import decode_dataframe, dedup_attempts, read_encoded
-
-    # dest must be disjoint from src: compaction wipes dest up front, so an
-    # in-place invocation (`compact out/ -o out/`) — or a dest nested inside
-    # src (or vice versa) — would delete the source table before anything is
-    # copied, permanently losing it despite the "never mutates src_dir"
-    # contract. Refuse before touching the filesystem.
-    s = os.path.abspath(src_dir).rstrip("/")
-    d = os.path.abspath(dest_dir).rstrip("/")
-    if s == d or d.startswith(s + "/") or s.startswith(d + "/"):
-        raise ValueError(
-            f"compact dest_dir {dest_dir!r} overlaps src_dir {src_dir!r}; "
-            "compaction replaces dest and must never touch src"
-        )
-
+    enc = _open_source(spark, src_dir, dest_dir, "compact")
     if min_rows is None:
         min_rows = max_rows // 2
-    enc = dedup_attempts(read_encoded(spark, src_dir))
-    _require_current_metrics_struct(enc, "compaction")
     undersized = (F.col("n_rows") < min_rows) & (F.col("n_values") < max_values // 2)
-    # body = everything but the attempt partition column — extras-aware
-    body_cols = [c for c in enc.columns if c != "attempt"]
-
-    # dest is fully replaced up front: a prior (possibly crashed) compact's
-    # attempt=2 files would survive the attempt=1 overwrite below, and the
-    # re-encode would then APPEND a second copy of every merged chunk at the
-    # same (chunk_id, attempt) — a duplicate dedup_attempts cannot remove
-    dest_path = spark._jvm.org.apache.hadoop.fs.Path(dest_dir)
-    fs = dest_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(dest_path):
-        fs.delete(dest_path, True)
-
-    kept = enc.filter(~undersized).select(*body_cols)
-    kept.write.mode("overwrite").option("maxRecordsPerFile", 8).option(
-        "compression", "uncompressed"
-    ).parquet(f"{dest_dir}/encoded/attempt=1")
-    # derive kept ids from the source predicate, not a read-back: an all-small
-    # table writes zero kept files and schema inference would reject the dir
-    kept_ids = enc.filter(~undersized).select("chunk_id").distinct()
-    kept_lineage = (
-        spark.read.parquet(f"{src_dir}/lineage")
-        .filter(F.col("status") == "complete")
-        .dropDuplicates(["chunk_id"])
-        # no forced broadcast: a mostly-kept compaction at the 10^12-row
-        # design point carries an O(#chunks) id set — AQE picks broadcast
-        # while it is small and a shuffled semi-join of key-only rows past
-        # that (same rule as run()'s resume anti-join)
-        .join(kept_ids, "chunk_id", "left_semi")
-        .withColumn("attempt", F.lit(1))
-    )
-    kept_lineage.write.mode("overwrite").parquet(f"{dest_dir}/lineage")
-
     if cfg is None:
         cfg = plan_from_encoded(spark, src_dir)
         # the inferred max_chunk_rows is the max over EXISTING chunks — on a
         # mostly-small table that would re-create small chunks; the compaction
         # target is the caller's max_rows
         cfg.max_chunk_rows = max_rows
-
-    # per-pass salt, deterministic in the SET of chunks being merged: chunk
-    # ids from this pass can never collide with kept ids from an earlier
-    # compaction of the same sources (a fixed salt would), and a re-run of
-    # the identical pass derives the identical ids (resume-safe)
-    digest = (
-        enc.filter(undersized)
-        .agg(F.sum(F.xxhash64("chunk_id").cast("decimal(38,0)")).alias("d"))
-        .first()["d"]
+    _copy_kept_reencode_rest(
+        spark, src_dir, dest_dir, enc,
+        kept=enc.filter(~undersized),
+        groups=[(enc.filter(undersized), cfg, "c")],
+        max_rows=max_rows,
+        max_values=max_values,
     )
-    salt = f"c{int(digest or 0) % 0xFFFFFFFF:08x}"
-
-    # persist the decoded fragments: run() aggregates them once for bucket
-    # planning and again through the encode shuffle — without the cache the
-    # decode UDF would pay for every undersized payload twice
-    from pyspark import StorageLevel
-
-    from .decode_job import extra_types_of
-
-    small_seq = decode_dataframe(
-        enc.filter(undersized), extra_types=extra_types_of(enc)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        run(
-            spark,
-            small_seq,
-            dest_dir,
-            cfg=cfg,
-            resume=True,
-            max_rows=max_rows,
-            max_values=max_values,
-            salt=salt,
-        )
-    finally:
-        small_seq.unpersist()
 
     before = enc.agg(
         F.count("*").alias("chunks"),
