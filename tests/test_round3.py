@@ -459,6 +459,50 @@ def test_compact_merges_small_chunks_and_preserves_kept_payloads(spark, tmp_path
     assert verify_bit_identical(both, dec)["pass"]
 
 
+def test_compact_keeps_each_chunks_auto_codec(spark, tmp_path):
+    """Compaction re-selects an auto-chosen codec per chunk instead of
+    forcing the table's majority codec onto every re-encoded chunk: on a
+    four-profile table whose undersized chunks cannot merge (one per
+    source), the tokens codec counts and the stored bytes stay put."""
+    tbl = generate_sequences(
+        scale=0.02, seed=5, skew=False, profiles=["lowcard", "sorted_ts", "runs", "random"]
+    )
+    df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA)
+    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
+    cfg = Prescription.parse("set column tokens compression none").apply()
+    encode_job.run(spark, df, src, cfg=cfg, max_rows=60)
+
+    def token_codecs(out):
+        m = encode_job.column_metrics(spark.read.parquet(f"{out}/encoded"))
+        return sorted(r["codec"] for r in m.filter(F.col("column") == "tokens").collect())
+
+    s = encode_job.compact(spark, src, dest, min_rows=45, max_rows=400)
+    assert s["merged_chunks"] > 0
+    assert token_codecs(dest) == token_codecs(src)
+    assert s["bytes_after"] == s["bytes_before"]
+
+
+def test_compact_keeps_the_dictionary_off(spark, tmp_path):
+    """`dictionary false` survives compaction: the stored chunks carry auto
+    rules, but with no dict chunk in the table the re-encode keeps the
+    dictionary off, so a low-cardinality string and bigint extra that pick
+    `str_dict` / `dict` on their own stay off it."""
+    pdf = generate_sequences(scale=0.02, seed=5, skew=False, profiles=["lowcard", "runs"]).to_pandas()
+    pdf["tag"] = [f"category/{i % 5:03d}/long-shared-label" for i in range(len(pdf))]
+    pdf["code"] = [(i * 7919 % 5) * 1_000_000_007 for i in range(len(pdf))]
+    df = spark.createDataFrame(pdf)
+    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
+    cfg = Prescription.parse(
+        "set column tag dictionary false\nset column code dictionary false"
+    ).apply()
+    encode_job.run(spark, df, src, cfg=cfg, max_rows=60)
+    s = encode_job.compact(spark, src, dest, min_rows=45, max_rows=400)
+    assert s["merged_chunks"] > 0
+    m = encode_job.column_metrics(spark.read.parquet(f"{dest}/encoded"))
+    codecs = {r["codec"] for r in m.filter(F.col("column").isin("tag", "code")).collect()}
+    assert codecs and not codecs & {"dict", "str_dict"}
+
+
 # ------------------------------------------ container integrity
 
 def test_truncated_and_corrupt_containers_fail_loudly():

@@ -524,18 +524,20 @@ def test_cli_lint_encoded(spark, tmp_path, capsys):
 
 
 def test_plan_from_encoded_infers_extras(spark, tmp_path):
-    """X1 inference generalizes to extra columns: majority codec/outer per
-    extra, and `statistics none` on an extra bigint column round-trips as
-    none (the blanked-stats signal is dtype-driven, not hard-wired to
-    tokens/n_tok)."""
+    """X1 inference generalizes to extra columns: a forced codec per extra
+    is carried over while an auto-chosen one is left to re-select, and
+    `statistics none` on an extra bigint column round-trips as none (the
+    blanked-stats signal is dtype-driven, not hard-wired to tokens/n_tok)."""
     out = str(tmp_path / "out")
     df = _events_6col(spark, n=1200)
-    cfg = Prescription.parse("set column user_id statistics none").apply()
+    cfg = Prescription.parse(
+        "set column user_id statistics none\nset column flag encoding rle"
+    ).apply()
     encode_job.run(spark, df, out, cfg=cfg, resume=False)
     inferred = encode_job.plan_from_encoded(spark, out)
     assert inferred.stats_level.get("user_id") == "none"
-    assert "value" in inferred.overrides  # majority codec captured (bss)
-    assert inferred.overrides["value"] == "bss"
+    assert "value" not in inferred.overrides  # auto codec (bss) re-selects
+    assert inferred.overrides["flag"] == "rle"  # forced codec carried over
     assert inferred.stats_level.get("value") is None  # stats present → default
 
 

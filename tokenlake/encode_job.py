@@ -15,7 +15,9 @@ re-encodes only unfinished chunks.
 
 from __future__ import annotations
 
+import dataclasses
 import re
+import struct
 import time
 import zlib
 
@@ -25,17 +27,33 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .chunking import MAX_CHUNK_ROWS, MAX_CHUNK_VALUES, assign_chunks, plan_buckets
-from .codecs import codec_of, encode_int_column, encode_str_column
-from .codecs.bloom import build_bloom
+from .codecs import codec_of, encode_int_column
+from .codecs.bitio import sorted_factorize
+from .codecs.bloom import build_bloom, hash_strings
 from .codecs.container import (
     DT_BOOL,
+    DT_DECIMAL128,
     DT_FIXED_BINARY,
     DT_FLOAT32,
     DT_FLOAT64,
     DT_INT32,
-    DT_STRING,
+    DTYPE_SPARK,
+    FLAG_BLOCKED,
+    ZSTD_LEVEL,
+    _TRIAL_BYTES,
+    _outer_compress,
+    decimal128_minmax,
+    dtype_of,
+    dtype_of_arrow,
+    encode_any_column,
+    encode_list_column,
+    int_view_of,
+    is_string_kind,
     is_wide,
+    spark_ddl_of_arrow,
+    wrap,
 )
+from .codecs.strcodecs import STR_CODEC_IDS, enc_str_dict, enc_str_plain, enc_str_prefix
 from .plan import EncodeConfig
 from .select import Decision, select_codec, select_float_codec
 from .stats import compute_chunk_stats
@@ -233,8 +251,6 @@ def _pick_str_codec(valid: pa.Array, allow_dict: bool = True) -> tuple[str, byte
     winner returns body=None and the caller does the one full encode.
     Chunks arrive doc_id-sorted, so a head sample sees the same
     shared-prefix / cardinality structure as the whole chunk."""
-    from .codecs.strcodecs import enc_str_dict, enc_str_plain, enc_str_prefix
-
     n = len(valid)
     if n == 0:
         return "str_plain", None, "string-byte-array-encoding"
@@ -324,138 +340,110 @@ def _patch_decimal128_stats(st, valid: pa.Array, dtype: int):
     row's int64 columns (exact whenever the values fit 64 bits — the common
     case). Zone-map scans reject decimal columns (`scan_value_range`), so
     these bounds are informational, never a pruning predicate."""
-    from .codecs.container import DT_DECIMAL128, decimal128_minmax
-
     if dtype != DT_DECIMAL128 or st is None or len(valid) == 0:
         return st
-    import dataclasses
-
     i64 = 1 << 63
     sat = lambda v: min(max(v, -i64), i64 - 1)  # noqa: E731 — saturate BOTH sides
     tmin, tmax = decimal128_minmax(valid)
     return dataclasses.replace(st, min_val=sat(tmin), max_val=sat(tmax))
 
 
-def _encode_list_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
-    """One extra LIST column → (payload, stats, rule, n_values, dtype_ddl).
-    The tokens pattern generalized: flattened values pick their codec via
-    the shared dispatch (floats → the R4 bss gate — the reference's
-    embedding detection, rules/vector_embedding.rs:19-76, finally feeding a
-    real codec path); per-row lengths FOR-pack inside the same
-    self-describing frame."""
-    from .codecs.container import (
-        DT_DECIMAL128,
-        dtype_of_arrow,
-        encode_list_column,
-        int_view_of,
-        is_string_kind,
-        spark_ddl_of_arrow,
-    )
-
-    t = arr.type
-    if pa.types.is_fixed_size_list(t):
-        arr = arr.cast(pa.list_(t.value_type))
-        t = arr.type
-    elem = dtype_of_arrow(t.value_type)
-    ddl = f"array<{spark_ddl_of_arrow(t.value_type)}>"
-    outer = cfg.outer_for(name)
-    values = arr.flatten()
-    # R10 small-pages knob: a per-column data_page_size_limit splits the
-    # list payload into independently decodable blocks sized to the byte
-    # budget, so lookup() decodes O(doc) embedding bytes (FLAG_BLOCKED).
-    # An explicit block_rows (the X1 carrier plan_from_encoded sniffs from
-    # a stored blocked column) wins over the byte budget, so compaction /
-    # rewrite reproduce the exact stored layout.
-    block_rows = cfg.block_rows_for(name)
-    page_limit = cfg.page_limit_for(name)
-    if block_rows is None and page_limit and len(arr):
-        val_bytes = sum(len(b) for b in (values.buffers() or []) if b is not None)
-        per_row = max(1, val_bytes // max(1, len(arr)))
-        block_rows = max(16, page_limit // per_row)
+def _flat_values(arr: pa.Array):
+    """The one list normaliser → (arr, values, valid, dtype): a fixed-size
+    list is cast to a plain list, a list column's values are its flattened
+    elements (a scalar column is its own values), `valid` drops the nulls
+    and `dtype` is the element dtype code. Encode, lint and the bloom
+    builder all see a column through it."""
+    if pa.types.is_fixed_size_list(arr.type):
+        arr = arr.cast(pa.list_(arr.type.value_type))
+    is_list = pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
+    values = arr.flatten() if is_list else arr
     valid = values.drop_null() if values.null_count else values
-    if is_string_kind(elem):
-        codec, body, rule, _ = _choose_str(valid, elem, name, cfg)
-        if elem == DT_FIXED_BINARY or values.null_count or block_rows:
-            body = None  # fsb needs its width header; nulls need the bitmap
-        return (
-            encode_list_column(arr, codec, outer, values_body=body, block_rows=block_rows),
-            None,
-            rule,
-            len(values),
-            ddl,
-        )
-    view = int_view_of(valid, elem) if len(valid) else np.empty(0, np.int32)
-    st = compute_chunk_stats(view, n_rows=len(arr))
-    d = _choose_num(view, st, elem, name, cfg)
-    payload = encode_list_column(arr, d.codec, outer, block_rows=block_rows)
-    if elem == DT_BOOL:
-        return payload, None, d.rule, len(values), ddl
-    wide = is_wide(elem)
-    elem_bytes = 16 if elem == DT_DECIMAL128 else 8 if wide else 4
-    if d.codec not in ("plain", "bss") and len(payload) > len(view) * elem_bytes + 128:
-        # hard guarantee: never worse than plain (R3 escape hatch)
-        payload = encode_list_column(arr, "plain", outer, block_rows=block_rows)
-        d = select_codec(view, st, forced="plain", wide=wide)
-    st = _patch_decimal128_stats(st, valid, elem)
-    return payload, st, d.rule, len(values), ddl
+    return arr, values, valid, dtype_of_arrow(values.type)
 
 
-def _encode_extra(arr: pa.Array, name: str, cfg: EncodeConfig):
-    """One extra column → (payload, ChunkStats|None, rule, n_values|None,
-    dtype_ddl|None) — the last two are set only for list columns (element
-    count and the array<...> DDL string).
-    Dispatch: Spark/Arrow type → codec family (the generic column registry;
-    reference column_context.rs:213-292 covers the same physical types),
-    then the shared `_choose_str` / `_choose_num` decision."""
-    from .codecs.container import (
-        DT_DECIMAL128,
-        dtype_of_arrow,
-        encode_any_column,
-        int_view_of,
-        is_string_kind,
-        spark_ddl_of_arrow,
-    )
+def _encode_column(arr: pa.Array, name: str, cfg: EncodeConfig):
+    """One column, scalar or list → (payload, ChunkStats|None, rule,
+    n_values, dtype_ddl). n_tok, doc_id and every extra column take this
+    path. Dispatch: Spark/Arrow type → codec family (the generic column
+    registry; reference column_context.rs:213-292 covers the same physical
+    types), then the shared `_choose_str` / `_choose_num` decision.
 
-    if (
-        pa.types.is_list(arr.type)
-        or pa.types.is_large_list(arr.type)
-        or pa.types.is_fixed_size_list(arr.type)
-    ):
-        return _encode_list_extra(arr, name, cfg)
-    dtype = dtype_of_arrow(arr.type)
+    A list column is the tokens pattern generalized: its flattened values
+    pick the codec (floats → the R4 bss gate, the reference's embedding
+    detection, rules/vector_embedding.rs:19-76), per-row lengths FOR-pack
+    inside the same self-describing frame, and n_values counts ELEMENTS."""
+    arr, values, valid, dtype = _flat_values(arr)
+    is_list = values is not arr
     # exact DDL for the metrics row: decimal carries (p, s) the dtype BYTE
     # cannot (the payload header stores them separately)
-    ddl = spark_ddl_of_arrow(arr.type)
+    ddl = spark_ddl_of_arrow(values.type)
     outer = cfg.outer_for(name)
-    valid = arr.drop_null() if arr.null_count else arr
+    block_rows = None
+    if is_list:
+        ddl = f"array<{ddl}>"
+        # R10 small-pages knob: a per-column data_page_size_limit splits the
+        # list payload into independently decodable blocks sized to the byte
+        # budget, so lookup() decodes O(doc) embedding bytes (FLAG_BLOCKED).
+        # An explicit block_rows (the X1 carrier plan_from_encoded sniffs from
+        # a stored blocked column) wins over the byte budget, so compaction /
+        # rewrite reproduce the exact stored layout.
+        block_rows = cfg.block_rows_for(name)
+        page_limit = cfg.page_limit_for(name)
+        if block_rows is None and page_limit and len(arr):
+            val_bytes = sum(len(b) for b in (values.buffers() or []) if b is not None)
+            per_row = max(1, val_bytes // max(1, len(arr)))
+            block_rows = max(16, page_limit // per_row)
+
+    def encode(codec: str, body: bytes | None = None) -> bytes:
+        if is_list:
+            return encode_list_column(arr, codec, outer, values_body=body, block_rows=block_rows)
+        if body is not None:
+            return wrap(STR_CODEC_IDS[codec], body, outer, dtype)
+        return encode_any_column(arr, codec, outer)
+
     if is_string_kind(dtype):
         codec, body, rule, _ = _choose_str(valid, dtype, name, cfg)
-        if body is not None and not arr.null_count and dtype != DT_FIXED_BINARY:
-            # the winning trial body IS the payload (same reuse as doc_id).
-            # NOT for fixed-size binary: its payload needs the u32 width
-            # header encode_any_column prepends — reusing the bare str body
-            # would corrupt the frame.
-            from .codecs.container import wrap
-            from .codecs.strcodecs import STR_CODEC_IDS
-
-            return wrap(STR_CODEC_IDS[codec], body, outer, dtype), None, rule, None, ddl
-        return encode_any_column(arr, codec, outer), None, rule, None, ddl
+        # the winning trial body IS the payload, except that fixed-size
+        # binary needs its width header, nulls need the validity bitmap and
+        # a blocked list re-encodes per block
+        if dtype == DT_FIXED_BINARY or values.null_count or block_rows:
+            body = None
+        return encode(codec, body), None, rule, len(values), ddl
     view = int_view_of(valid, dtype) if len(valid) else np.empty(0, np.int32)
     st = compute_chunk_stats(view, n_rows=len(arr))
     d = _choose_num(view, st, dtype, name, cfg)
-    payload = encode_any_column(arr, d.codec, outer)
+    payload = encode(d.codec)
     if dtype == DT_BOOL:
-        return payload, None, d.rule, None, ddl
+        return payload, None, d.rule, len(values), ddl
     wide = is_wide(dtype)
-    elem = 16 if dtype == DT_DECIMAL128 else 8 if wide else 4
-    if d.codec not in ("plain", "bss") and len(payload) > len(view) * elem + 64:
-        # hard guarantee: never worse than plain (R3 escape hatch)
-        payload = encode_any_column(arr, "plain", outer)
-        d = select_codec(view, st, forced="plain", wide=wide)
+    elem_bytes = 16 if dtype == DT_DECIMAL128 else 8 if wide else 4
+    # the lengths frame of a list payload earns it a larger slack
+    slack = 128 if is_list else 64
+    if d.codec not in ("plain", "bss") and len(payload) > len(view) * elem_bytes + slack:
+        # hard guarantee: never worse than plain (R3 escape hatch). The bound
+        # above leaves out plain's own header and validity bitmap, so it only
+        # screens: the swap happens when the plain payload really is smaller
+        plain = encode("plain")
+        if len(plain) < len(payload):
+            payload = plain
+            d = select_codec(view, st, forced="plain", wide=wide)
     # AFTER selection: the selector's cost model runs on the lo-word view;
     # only the metrics row gets the true-value bounds
     st = _patch_decimal128_stats(st, valid, dtype)
-    return payload, st, d.rule, None, ddl
+    return payload, st, d.rule, len(values), ddl
+
+
+def _token_values(toks: pa.Array) -> np.ndarray:
+    """The flat int32 element stream of a tokens list array. Null ELEMENTS
+    are rejected — the input contract is array<int32 NOT NULL>; silently
+    coercing them would feed garbage into stats and codecs."""
+    values = toks.flatten()
+    if values.null_count:
+        raise ValueError(
+            "null token elements not supported (contract: array<int32 NOT NULL>)"
+        )
+    return values.to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
 
 
 def _gather_flat(toks: pa.Array, idx: np.ndarray) -> np.ndarray:
@@ -464,15 +452,10 @@ def _gather_flat(toks: pa.Array, idx: np.ndarray) -> np.ndarray:
     single hottest op of the encode kernel (the index stream runs int32;
     chunk caps keep total token counts far below 2**31, and decode guards
     the same bound)."""
-    values = toks.flatten()
-    if values.null_count:
-        raise ValueError(
-            "null token elements not supported (contract: array<int32 NOT NULL>)"
-        )
+    flat0 = _token_values(toks)
     offsets = np.frombuffer(
         toks.buffers()[1], np.int32, count=len(toks) + 1, offset=toks.offset * 4
     ).astype(np.int64)
-    flat0 = values.to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
     starts = offsets[:-1] - offsets[0]
     lens = np.diff(offsets)
     nl = lens[idx]
@@ -492,21 +475,9 @@ def _bloom_of(arr: pa.Array, bp: dict) -> bytes | None:
     """Membership filter over one column's values (list extras: element
     membership — the tokens semantics generalized). Strings enter via the
     FNV-1a 64 hash domain, fixed-width types via their int carrier view."""
-    from .codecs.bloom import build_bloom, hash_strings
-    from .codecs.container import DT_BOOL, dtype_of_arrow, int_view_of, is_string_kind
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    t = arr.type
-    if pa.types.is_fixed_size_list(t):
-        arr = arr.cast(pa.list_(t.value_type))
-        t = arr.type
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        arr = arr.flatten()
-    valid = arr.drop_null() if arr.null_count else arr
+    _, _, valid, dtype = _flat_values(arr)
     if len(valid) == 0:
         return None
-    dtype = dtype_of_arrow(valid.type)
     if dtype == DT_BOOL:
         return None  # two possible values — a filter prunes nothing
     if is_string_kind(dtype):
@@ -532,8 +503,9 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
     Null ELEMENTS inside a token array are rejected — the input contract is
     array<int32 NOT NULL>.
 
-    Any input column beyond the canonical four becomes its own
-    `payload_<name>` column chunk via the generic registry (_encode_extra).
+    n_tok, doc_id and any input column beyond the canonical four (each its
+    own `payload_<name>` column chunk) encode through one generic column
+    path, `_encode_column`; tokens and source keep their own.
     """
     t0 = time.perf_counter()
     cfg = cfg or EncodeConfig()
@@ -582,14 +554,7 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
         toks_valid = toks.drop_null()
     else:
         toks_valid = toks
-    if flat_sorted is not None:
-        flat = flat_sorted
-    else:
-        if len(toks_valid) and toks_valid.flatten().null_count:
-            raise ValueError(
-                "null token elements not supported (contract: array<int32 NOT NULL>)"
-            )
-        flat = toks_valid.flatten().to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
+    flat = flat_sorted if flat_sorted is not None else _token_values(toks_valid)
     fp = _fingerprint(doc, flat)
     stat_limit = cfg.statistics_truncate_length or MAX_STAT_LENGTH
     # `statistics none` blanks the stored stats (reference EnabledStatistics,
@@ -610,8 +575,6 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
     chunk_bloom: list = [None]
 
     def emit(column, payload, n_values, raw_bytes, stats=None, rule="", t_start=None, bloom=None, null_count=0, dtype_ddl=None, col_bloom=None):
-        from .codecs.container import DTYPE_SPARK, dtype_of
-
         codec, outer_name = codec_of(payload)
         keep_stats = cfg.stats_for(column) != "none"
         payloads[column] = payload
@@ -624,20 +587,14 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
         # Skipped for tiny frames where codec framing dominates the ratio.
         trial = 0.0
         if outer_name == "none" and len(payload) >= 4096:
-            from .codecs.container import ZSTD_LEVEL, _TRIAL_BYTES, _outer_compress
-
             tail = payload[-_TRIAL_BYTES:]
             trial = len(_outer_compress("zstd", ZSTD_LEVEL, tail)) / len(tail)
         # blocked-layout evidence: read block_rows off the written frame
         # header (local bytes) so plan_from_encoded can preserve the R10
         # small-pages layout without ever touching stored payloads
-        from .codecs.container import FLAG_BLOCKED
-
         blk = 0
         if len(payload) >= 16 and payload[:2] == b"TL" and (payload[7] & FLAG_BLOCKED):
-            import struct as _struct
-
-            blk = _struct.unpack_from("<I", payload, 12)[0]
+            blk = struct.unpack_from("<I", payload, 12)[0]
         col_meta.append(
             {
                 "column": column,
@@ -663,8 +620,6 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
     # resolve factorizes the stream ONCE and the dictionary encoder reuses
     # it (fact cache) — previously the same hash pass ran twice per chunk.
     tcol = time.perf_counter()
-    from .codecs.bitio import sorted_factorize
-
     fact_cache: dict = {}
     # one bounds pass shared by the stats row AND the factorizer's
     # dense-path check (each used to rescan the multi-MB stream)
@@ -688,73 +643,34 @@ def encode_chunk(t: pa.Table, cfg: EncodeConfig | None = None) -> pa.Table:
     emit("tokens", payload, len(flat), flat.nbytes, st, decision.rule, tcol,
          bloom=bloom_buf, null_count=toks.null_count, dtype_ddl="array<int>")
 
-    # n_tok: small-int lengths — same selector machinery; carries the shared
-    # row-validity bitmap when null rows exist
-    tcol = time.perf_counter()
-    lens_valid = (ntok_arr.drop_null() if ntok_arr.null_count else ntok_arr).to_numpy(
-        zero_copy_only=False
-    ).astype(np.int32)
-    lst = compute_chunk_stats(lens_valid, n_rows)
-    ldec = _choose_num(lens_valid, lst, DT_INT32, "n_tok", cfg)
-    if ntok_arr.null_count:
-        from .codecs.container import encode_any_column
+    def emit_column(name, arr, raw_bytes):
+        tcol = time.perf_counter()
+        buf, st, rule, n_values, ddl = _encode_column(arr, name, cfg)
+        bp = cfg.bloom_for(name)
+        emit(name, buf, n_values, raw_bytes, st, rule, tcol, null_count=arr.null_count,
+             dtype_ddl=ddl, col_bloom=_bloom_of(arr, bp) if bp else None)
 
-        nbuf = encode_any_column(ntok_arr, ldec.codec, cfg.outer_for("n_tok"))
-    else:
-        nbuf = encode_int_column(lens_valid, ldec.codec, outer=cfg.outer_for("n_tok"))
-    nbp = cfg.bloom_for("n_tok")
-    emit("n_tok", nbuf, n_rows, lens_valid.nbytes, lst, ldec.rule, tcol,
-         null_count=ntok_arr.null_count,
-         col_bloom=_bloom_of(ntok_arr, nbp) if nbp else None)
-
+    # n_tok carries the shared row-validity bitmap when null rows exist
+    emit_column("n_tok", ntok_arr, 4 * (n_rows - ntok_arr.null_count))
     # doc_id: sorted unique ids → front coding vs plain vs dict (R1/R5 on strings)
-    tcol = time.perf_counter()
-    from .codecs.container import wrap as _wrap
-    from .codecs.strcodecs import STR_CODEC_IDS
-
-    doc_codec, doc_body, doc_rule, _ = _choose_str(doc_valid, DT_STRING, "doc_id", cfg)
-    if doc.null_count:
-        from .codecs.container import encode_any_column
-
-        dbuf = encode_any_column(doc, doc_codec, cfg.outer_for("doc_id"))
-    elif doc_body is not None:
-        # the winning trial body IS the payload — don't encode it twice
-        dbuf = _wrap(STR_CODEC_IDS[doc_codec], doc_body, cfg.outer_for("doc_id"), DT_STRING)
-    else:
-        dbuf = encode_str_column(doc, doc_codec, outer=cfg.outer_for("doc_id"))
-    doc_bytes = int(pc.sum(pc.binary_length(doc_valid)).as_py() or 0)
-    dbp = cfg.bloom_for("doc_id")
-    emit("doc_id", dbuf, n_rows, doc_bytes, None, doc_rule, tcol, null_count=doc.null_count,
-         col_bloom=_bloom_of(doc, dbp) if dbp else None)
+    emit_column("doc_id", doc, int(pc.sum(pc.binary_length(doc_valid)).as_py() or 0))
 
     # source: constant within a chunk by construction → dictionary
     tcol = time.perf_counter()
     src_codec = _coerce_str_codec(cfg.overrides.get("source", "str_dict"))
-    if src.null_count:
-        from .codecs.container import encode_any_column
-
-        sbuf = encode_any_column(src, src_codec, cfg.outer_for("source"))
-    else:
-        sbuf = encode_str_column(src, src_codec, outer=cfg.outer_for("source"))
+    sbuf = encode_any_column(src, src_codec, cfg.outer_for("source"))
     src_bytes = int(pc.sum(pc.binary_length(src.drop_null() if src.null_count else src)).as_py() or 0)
     sbp = cfg.bloom_for("source")
     emit("source", sbuf, n_rows, src_bytes, None, "dictionary-encoding-cardinality", tcol,
          null_count=src.null_count, col_bloom=_bloom_of(src, sbp) if sbp else None)
 
-    # extra columns: generic registry dispatch
     for name in extras:
-        tcol = time.perf_counter()
         arr = extra_arrs[name]
-        ebuf, est, erule, n_vals, ddl = _encode_extra(arr, name, cfg)
         # buffers() is recursive (child value buffers included), so raw
         # covers list extras' element storage too; list extras count
         # ELEMENTS in n_values (the tokens convention) but null ROWS in
         # null_count
-        raw = sum(len(b) for b in (arr.buffers() or []) if b is not None)
-        ebp = cfg.bloom_for(name)
-        emit(name, ebuf, n_rows if n_vals is None else n_vals, raw, est, erule,
-             tcol, null_count=arr.null_count, dtype_ddl=ddl,
-             col_bloom=_bloom_of(arr, ebp) if ebp else None)
+        emit_column(name, arr, sum(len(b) for b in (arr.buffers() or []) if b is not None))
 
     row = {
         "chunk_id": chunk_id,
@@ -897,12 +813,15 @@ def lineage_from_encoded(encoded: DataFrame, attempt: int = 1) -> DataFrame:
 def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     """X1 property inference (reference infer_writer_properties,
     fix.rs:25-70): reconstruct an EncodeConfig from an existing encoded table
-    so a re-encode preserves untouched columns' settings. Per column:
-    majority codec and outer (most_frequent, fix.rs:196-211, deterministic
-    tiebreak on name), bloom iff any chunk carries a filter (fix.rs:168-182),
-    statistics level page > chunk > none (infer_column_statistics_enabled,
-    fix.rs:139-166 — the engine's "page-level" analog is the bloom/membership
-    index, its "chunk stats" are the stored min/max/ndv metrics), plus the
+    so a re-encode preserves untouched columns' settings. Per column: the
+    majority codec (most_frequent, fix.rs:196-211, deterministic tiebreak on
+    name) as a forced override only when every stored chunk with that codec
+    records rule `forced` (an auto codec re-selects per chunk), the `!dict`
+    marker when no chunk stores a dict codec, the majority outer, bloom iff
+    any chunk carries a filter (fix.rs:168-182), statistics level page >
+    chunk > none (infer_column_statistics_enabled, fix.rs:139-166 — the
+    engine's "page-level" analog is the bloom/membership index, its "chunk
+    stats" are the stored min/max/ndv metrics), plus the
     file-level max_chunk_rows from the largest chunk (infer_max_row_group_size,
     fix.rs:95-103). ONE aggregate over the metadata (single scan);
     O(#columns × #codecs) rows reach the driver, never O(#chunks).
@@ -943,6 +862,9 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
         enc.groupBy("column", "codec", "outer")
         .agg(
             F.count("*").alias("cnt"),
+            # source has no selector (its codec is always the configured
+            # one), so its stored codec is as good as forced
+            F.min((F.col("rule") == "forced") | (F.col("column") == "source")).alias("forced"),
             F.max("has_bloom").alias("has_bloom"),
             F.max(F.when(int_stats, F.col("distinct_est") > 0)).alias("has_int_stats"),
             F.max(F.when(doc_stats, F.col("doc_id_max") != "")).alias("has_doc_stats"),
@@ -954,10 +876,12 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     )
     codec_cnt: dict = {}
     outer_cnt: dict = {}
+    forced: dict = {}
     per_col: dict = {}
     for g in grows:
         c = g["column"]
         codec_cnt[(c, g["codec"])] = codec_cnt.get((c, g["codec"]), 0) + g["cnt"]
+        forced[(c, g["codec"])] = forced.get((c, g["codec"]), True) and bool(g["forced"])
         outer_cnt[(c, g["outer"])] = outer_cnt.get((c, g["outer"]), 0) + g["cnt"]
         a = per_col.setdefault(
             c,
@@ -988,7 +912,16 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     ]
     cfg = EncodeConfig()
     for r in rows:
-        cfg.overrides[r["column"]] = r["codec"]
+        # only a codec the user forced is carried over: an auto-selected one
+        # re-selects per chunk, so a merged or rewritten chunk keeps the
+        # codec its own data suits instead of the table's majority
+        if forced[(r["column"], r["codec"])]:
+            cfg.overrides[r["column"]] = r["codec"]
+        # `dictionary false` (or a dictionary page limit no chunk fitted)
+        # leaves no trace but the absence of dict chunks: keep the
+        # dictionary off so an auto re-select cannot bring it back
+        if not any(c == r["column"] and v in ("dict", "str_dict") for c, v in codec_cnt):
+            cfg.overrides[f"!dict:{r['column']}"] = "1"
         cfg.outer[r["column"]] = r["outer"]
         # blanked stats are checked FIRST: a table written with `statistics
         # none` + `bloom_filter true` has a bloom but zeroed min/max/ndv, and
@@ -1426,8 +1359,6 @@ def rewrite_from_evidence(
     # small source chunk lacked, and a per-group outer would leave those
     # re-flagging forever. Majority vote per column, applied to EVERY
     # re-encode group; O(#columns) rows reach the driver.
-    from .codecs.container import ZSTD_LEVEL
-
     comp_votes = (
         ev.filter(F.col("rule").isin("enable-compression", "disable-compression"))
         .groupBy("column", "rule")

@@ -81,14 +81,19 @@ def lint_chunk(
         DT_DECIMAL128,
         DT_INT32,
         _outer_compress,
-        dtype_of_arrow,
         int_view_of,
         is_string_kind,
         is_wide,
     )
     from .codecs.intcodecs import INT_CODEC_IDS, encode_int_body
     from .codecs.strcodecs import STR_CODEC_IDS, encode_str_body
-    from .encode_job import _choose_num, _choose_str, extra_columns_of
+    from .encode_job import (
+        _choose_num,
+        _choose_str,
+        _flat_values,
+        _token_values,
+        extra_columns_of,
+    )
     from .select import Decision
 
     cfg = cfg or EncodeConfig()
@@ -96,17 +101,8 @@ def lint_chunk(
     chunk_id = t.column("chunk_id")[0].as_py()
     n_rows = t.num_rows
     toks = t.column("tokens").chunk(0) if t.column("tokens").num_chunks else pa.array([], pa.list_(pa.int32()))
-    if toks.null_count:
-        toks = toks.drop_null()
-    tok_values = toks.flatten()
-    if tok_values.null_count:
-        # same contract as encode_chunk: silently coercing null elements
-        # would feed NaN-garbage int32 into the stats and emit decisions
-        # for an encode that will actually fail
-        raise ValueError(
-            "null token elements not supported (contract: array<int32 NOT NULL>)"
-        )
-    flat = tok_values.to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
+    # same contract as encode_chunk: null token elements are rejected
+    flat = _token_values(toks.drop_null() if toks.null_count else toks)
     ntok_col = t.column("n_tok")
     lens = (
         ntok_col.drop_null() if ntok_col.null_count else ntok_col
@@ -171,14 +167,8 @@ def lint_chunk(
         # list extras lint over their FLATTENED element stream (the tokens
         # treatment generalized — stats/codec choice are element-level, the
         # lengths frame is plan-invisible)
-        nv = n_rows
-        if pa.types.is_fixed_size_list(arr.type):
-            arr = arr.cast(pa.list_(arr.type.value_type))
-        if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-            arr = arr.flatten()
-            nv = len(arr)
-        dtype = dtype_of_arrow(arr.type)
-        valid = arr.drop_null() if arr.null_count else arr
+        _, values, valid, dtype = _flat_values(arr)
+        nv = len(values)
         if is_string_kind(dtype):
             codec, body, rule, trial = _choose_str(valid, dtype, name, cfg)
             if body is None:
