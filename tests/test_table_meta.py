@@ -1,6 +1,8 @@
-"""Read ops plan from one metadata scan: job counts, a payload-free
-metadata scan, and Python workers that find the package on their own."""
+"""Read ops plan from one metadata read: job counts per executor, a
+payload-free metadata read, driver/Spark executor parity, lookup's id
+hashing, and Python workers that find the package on their own."""
 
+import glob
 import os
 import subprocess
 import sys
@@ -8,10 +10,12 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from tokenlake import decode_job, encode_job
+from tokenlake import chunking, decode_job, encode_job
+from tokenlake.local_reader import read_encoded_local
 from tokenlake.plan import Prescription
 from tokenlake.schema import SEQUENCES_SPARK_SCHEMA, generate_sequences
 
@@ -44,27 +48,40 @@ def _jobs(spark, fn):
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_read_ops_job_counts(spark, bloom_table):
-    """decode plans with one job; lookup + toArrow and scan_token + count
-    each take at most three (metadata scan, payload scan, count)."""
+# the threshold value that selects each table_meta executor on a local table
+EXECUTORS = {"driver": 1 << 62, "spark": -1}
+
+
+@pytest.fixture(params=sorted(EXECUTORS))
+def executor(request, monkeypatch):
+    monkeypatch.setattr(decode_job, "DRIVER_PLAN_MAX_BYTES", EXECUTORS[request.param])
+    return request.param
+
+
+def test_read_ops_job_counts(spark, bloom_table, executor):
+    """decode plans with no job on the driver executor and one on the Spark
+    executor (its metadata scan); lookup + toArrow then takes ≤ 1 / ≤ 3 and
+    scan_token + count ≤ 2 / ≤ 3 (payload scan and count, plus the
+    metadata scan on the Spark executor)."""
+    planning_jobs, lookup_max, scan_max = {"driver": (0, 1, 2), "spark": (1, 3, 3)}[executor]
     df, out = bloom_table
     dec, planning = _jobs(spark, lambda: decode_job.decode(spark, out))
-    assert planning == 1
+    assert planning == planning_jobs
     assert dec.columns == df.columns
 
     doc_id = df.orderBy("doc_id").first()["doc_id"]
     got, n = _jobs(spark, lambda: decode_job.lookup(spark, out, [doc_id]).toArrow())
-    assert n <= 3
+    assert n <= lookup_max
     assert got.column("doc_id").to_pylist() == [doc_id]
 
     token = 100_001
     got, n = _jobs(spark, lambda: decode_job.scan_token(spark, out, token).count())
-    assert n <= 3
+    assert n <= scan_max
     assert got == df.filter(F.array_contains("tokens", token)).count() > 0
 
 
 @pytest.mark.parametrize("column", [None, "tokens", "doc_id"])
-def test_metadata_scan_reads_no_payload(spark, bloom_table, column):
+def test_metadata_scan_reads_no_payload(spark, bloom_table, column, monkeypatch):
     _, out = bloom_table
     plan = decode_job._thin_scan(spark, out, column)._jdf.queryExecution().executedPlan().toString()
     scans = [line for line in plan.splitlines() if "ReadSchema" in line]
@@ -73,6 +90,156 @@ def test_metadata_scan_reads_no_payload(spark, bloom_table, column):
         # the scan's column list (ReadSchema itself prints truncated)
         read = line.split("FileScan parquet [", 1)[1].split("]", 1)[0]
         assert "chunk_id" in read and "payload_" not in read, line
+
+    # the driver executor's pyarrow read: the columns each file gives up
+    read, real = [], decode_job._thin_read
+    monkeypatch.setattr(decode_job, "_thin_read", lambda *a: read.append(real(*a)) or read[-1])
+    decode_job.table_meta(spark, out, column, admit=lambda cid, nb, m: True)
+    assert read
+    for t in read:
+        assert "chunk_id" in t.column_names, t.column_names
+        assert not [c for c in t.column_names if c.startswith("payload_")], t.column_names
+
+
+def test_lookup_hashes_ids_like_spark(spark):
+    """lookup buckets ids by catalyst's XXH64 called over py4j; it must
+    equal F.xxhash64, which assign_chunks buckets by."""
+    ids = ["", "dökümän-ü-ß-😀", "src#3#doc", "doc-000001"]
+    want = [
+        r["h"] for r in spark.createDataFrame([(i, d) for i, d in enumerate(ids)], "i int, d string")
+        .select("i", F.xxhash64("d").alias("h")).orderBy("i").collect()
+    ]
+    assert chunking.spark_xxhash64(spark, ids) == want
+
+
+# ------------------------------------------------ executor parity
+
+def _bloom_file(out):
+    (path,) = glob.glob(f"{out}/encoded/attempt=1/*.parquet")
+    return pq.read_table(path)
+
+
+def _write(root, attempt, t):
+    d = os.path.join(root, "encoded", f"attempt={attempt}")
+    os.makedirs(d, exist_ok=True)
+    if t is not None:
+        pq.write_table(t, os.path.join(d, "part-0.parquet"))
+
+
+@pytest.fixture(scope="module")
+def tables(bloom_table, tmp_path_factory):
+    """Stored tables that exercise the metadata read, by name: the bloom
+    table (one attempt, an extra column); two attempts (the first holding
+    half the chunks, so those stay at attempt 1 and the rest at 2); a
+    second attempt whose one chunk stores `score` as float (conflicting
+    dtypes); an empty `attempt=9` dir beside the table; only an empty
+    attempt dir; a schema-only file; and no `encoded/` dir at all."""
+    _, out = bloom_table
+    t = _bloom_file(out)
+    root = tmp_path_factory.mktemp("tables")
+    rows = t.slice(0, 1).to_pylist()
+    for c in rows[0]["columns"]:
+        if c["column"] == "score":
+            c["dtype"] = "float"
+    layouts = {
+        "two_attempts": {1: t.slice(0, t.num_rows // 2), 2: t},
+        "conflicting": {1: t, 2: pa.Table.from_pylist(rows, schema=t.schema)},
+        "empty_attempt": {1: t, 9: None},
+        "only_empty_attempt": {1: None},
+        "schema_only": {1: t.slice(0, 0)},
+        "missing": {},
+    }
+    paths = {"bloom": out}
+    for name, layout in layouts.items():
+        paths[name] = str(root / name)
+        os.makedirs(paths[name])
+        for attempt, part in layout.items():
+            _write(paths[name], attempt, part)
+    return paths
+
+
+def _ops(df):
+    """One call per read op, each returning a DataFrame."""
+    doc_id = df.orderBy("doc_id").first()["doc_id"]
+    n_tok = sorted(r["n_tok"] for r in df.select("n_tok").collect())
+    return {
+        "decode": lambda s, o: decode_job.decode(s, o),
+        "lookup": lambda s, o: decode_job.lookup(s, o, [doc_id, "no-such-doc"]),
+        "scan_token": lambda s, o: decode_job.scan_token(s, o, 100_001),
+        "scan_token_absent": lambda s, o: decode_job.scan_token(s, o, 2_000_000_000),
+        "scan_value_range": lambda s, o: decode_job.scan_value_range(s, o, "n_tok", 0, n_tok[len(n_tok) // 2]),
+        "chunks_containing_value": lambda s, o: decode_job.chunks_containing_value(s, o, "doc_id", doc_id),
+    }
+
+
+def _both(spark, monkeypatch, out, op):
+    """{executor: (attempts, types in order, admitted, row count)} of one op
+    on `out`, or (exception type, message) where it raised."""
+    metas, real = [], decode_job.table_meta
+    monkeypatch.setattr(decode_job, "table_meta", lambda *a, **k: metas.append(real(*a, **k)) or metas[-1])
+    got = {}
+    for name, limit in EXECUTORS.items():
+        monkeypatch.setattr(decode_job, "DRIVER_PLAN_MAX_BYTES", limit)
+        try:
+            n = op(spark, out).count()
+        except Exception as e:  # noqa: BLE001 — both executors must raise alike
+            got[name] = (type(e), str(e))
+            continue
+        m = metas[-1]
+        got[name] = (m.attempts, list(m.types.items()), m.admitted, n)
+    return got
+
+
+@pytest.mark.parametrize("table", [
+    "bloom", "two_attempts", "conflicting", "empty_attempt", "only_empty_attempt",
+    "schema_only", "missing",
+])
+def test_executors_agree(spark, bloom_table, tables, monkeypatch, table):
+    """The driver and Spark executors return an equal TableMeta (attempts,
+    types in order, admitted) and op result on every read op — or raise the
+    same error: conflicting dtypes, or no `encoded/` dir (naming it)."""
+    df, _ = bloom_table
+    out = tables[table]
+    for name, op in _ops(df).items():
+        got = _both(spark, monkeypatch, out, op)
+        assert got["driver"] == got["spark"], (name, got)
+        res = got["driver"]
+        if table == "conflicting":
+            assert res[0] is ValueError and "conflicting dtypes" in res[1]
+        elif table == "missing":
+            assert res[0] is FileNotFoundError and f"{out}/encoded" in res[1]
+        elif table in ("bloom", "two_attempts", "empty_attempt"):
+            assert res[1][-1] == ("score", "double"), res
+            assert name == "decode" or res[2] is not None, res  # an admitted dict
+    if table == "two_attempts":
+        every = {}
+        for name, limit in EXECUTORS.items():
+            monkeypatch.setattr(decode_job, "DRIVER_PLAN_MAX_BYTES", limit)
+            every[name] = decode_job.table_meta(spark, out, admit=lambda *a: True).admitted
+        assert every["driver"] == every["spark"]
+        assert set(every["driver"].values()) == {1, 2}  # each chunk at its earliest attempt
+        got = _both(spark, monkeypatch, out, _ops(df)["decode"])["driver"]
+        assert got[0] == [1, 2] and got[3] == df.count()
+    if table == "empty_attempt":
+        assert got["driver"][0] == [1, 9]
+    if table in ("only_empty_attempt", "schema_only"):
+        with pytest.raises(ValueError, match="no chunks found"):
+            read_encoded_local(out)
+
+
+def test_executors_agree_past_the_cap(spark, bloom_table, monkeypatch):
+    """Past LOOKUP_ISIN_CAP admitted chunks both executors leave `admitted`
+    None, and the payload scan semi-joins a fresh metadata scan."""
+    df, out = bloom_table
+    monkeypatch.setattr(decode_job, "LOOKUP_ISIN_CAP", 1)
+    ids = [r["doc_id"] for r in df.select("doc_id").limit(40).collect()]
+    ops = _ops(df)
+    ops["lookup"] = lambda s, o: decode_job.lookup(s, o, ids)
+    for name in ("lookup", "scan_token", "scan_value_range"):
+        got = _both(spark, monkeypatch, out, ops[name])
+        assert got["driver"] == got["spark"], (name, got)
+        assert got["driver"][2] is None and got["driver"][3] > 0, (name, got)
+    assert _both(spark, monkeypatch, out, ops["lookup"])["driver"][3] == len(ids)
 
 
 def test_local_workers_import_the_package_without_pythonpath(tmp_path):

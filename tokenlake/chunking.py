@@ -18,7 +18,7 @@ Scale design (axes A of the north_rule):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # R7 row cap (page_size.rs:7-10): 64 Ki rows per chunk.
 MAX_CHUNK_ROWS = 64 * 1024
@@ -114,3 +114,16 @@ def chunk_id_bucket(chunk_id: str) -> str:
     """The trailing '<bucket>' of one chunk id string — chunk_id_prefix's
     complement, for driver- and UDF-side code (lookup's candidate test)."""
     return chunk_id.rsplit("#", 1)[-1]
+
+
+def spark_xxhash64(spark: SparkSession, values: list[str]) -> list[int]:
+    """Spark's `xxhash64` of each string — what assign_chunks buckets doc
+    ids by: catalyst's XXH64 (seed 42) over the UTF-8 bytes, one py4j call
+    per value and no query. The call goes through an XXH64 instance: the
+    class's static `hashUnsafeBytes` shares its name with an instance
+    method, and py4j's static lookup finds one or the other by JVM
+    reflection order, so it fails in some JVM runs."""
+    jvm = spark._jvm
+    xxh64 = jvm.org.apache.spark.sql.catalyst.expressions.XXH64(42)
+    offset = jvm.org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
+    return [xxh64.hashUnsafeBytes(b, offset, len(b)) for b in (v.encode() for v in values)]

@@ -16,26 +16,34 @@ pandas object columns). The only Python loop is per CHUNK (64 Ki rows), the
 same granularity the encode UDF already works at.
 
 Read ops plan "footer first" (the reference reads a file's ParquetMetaData
-once and plans from it, lib.rs:32): `table_meta` lists the attempt dirs on
-the driver and runs ONE Spark job over the thin metadata columns, which
-yields the stored dtypes and evaluates the op's pruning per chunk. Then one
-payload scan under the explicit encoded schema decodes what was admitted —
-no schema inference, no candidate collects, no dedup joins on pruned reads.
+once and plans from it, lib.rs:32): `table_meta` lists `encoded/` on the
+driver and reads the thin metadata columns once, which yields the stored
+dtypes and evaluates the op's pruning per chunk. Two executors run that one
+read: a local table of at most DRIVER_PLAN_MAX_BYTES is read with pyarrow on
+the driver and pruned in-process (no Spark job, no Python worker round
+trip); any other table — larger, or on a non-local filesystem — is read by
+ONE Spark job. Then one payload scan under the explicit encoded schema
+decodes what was admitted — no schema inference, no candidate collects, no
+dedup joins on pruned reads.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import decimal
+import os
 from dataclasses import dataclass
 from typing import Iterator
+from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-from .chunking import chunk_id_bucket
+from .chunking import chunk_id_bucket, spark_xxhash64
 from .codecs import decode_column, decode_column_arrow
 # shapes an array for Spark's Arrow interchange: large types narrow,
 # fixed-size binary reads as binary, non-ns TIME units read as time64[ns]
@@ -303,6 +311,16 @@ def read_encoded(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/encoded")
 
 
+def _attempt_number(name: str) -> int | None:
+    """N of an `attempt=N` partition dir name, else None."""
+    if name.startswith("attempt="):
+        try:
+            return int(name.split("=", 1)[1])
+        except ValueError:
+            pass
+    return None
+
+
 def _encoded_attempts(spark: SparkSession, out_dir: str) -> list[int]:
     """The `attempt=N` partition numbers under `{out_dir}/encoded`, via the
     Hadoop FS API (one driver-side listStatus, no Spark job; file://,
@@ -315,15 +333,8 @@ def _encoded_attempts(spark: SparkSession, out_dir: str) -> list[int]:
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(p):
         return []
-    attempts = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("attempt="):
-            try:
-                attempts.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return attempts
+    names = (st.getPath().getName() for st in fs.listStatus(p))
+    return [n for n in map(_attempt_number, names) if n is not None]
 
 
 def decode(
@@ -350,12 +361,23 @@ def decode(
 # the thin per-chunk metadata every read op plans from (the reference's
 # footer: ParquetMetaData, read once per file, lib.rs:32) — never a payload
 _THIN_DDL = f"chunk_id string, nbuckets int, bloom binary, columns array<struct<{COLMETA_FIELDS}>>, attempt int"
+_COLMETA_NAMES = tuple(f.split(" ", 1)[0] for f in COLMETA_FIELDS.split(", "))
 
 # pruned reads: at most this many admitted chunk ids reach the driver as a
 # literal isin; past it the payload scan semi-joins the admitted frame (the
 # round-3 finding: an unbounded literal list grows O(#ids × #batches))
 LOOKUP_ISIN_CAP = 256
 _ADMITTED_DDL = "chunk_id string, attempt int"
+
+# executor choice: a local table whose encoded/ data files total at most
+# this many bytes plans on the driver (pyarrow read of the thin columns,
+# admit called in-process); any larger or non-local table plans in one Spark
+# job. The driver read grows with the table, the job barely: on 4 vCPUs,
+# with 80 KB bloom-carrying chunks, 29 MiB read in 0.22 s against a 0.31 s
+# job and 116 MiB in 0.81 s against 0.66 s, so at 64 MiB the driver read
+# costs about what a plain decode's planning job does, and far less than a
+# pruning op's job, which runs admit in Python workers (1.2–3.8 s there).
+DRIVER_PLAN_MAX_BYTES = 64 << 20
 
 
 def _thin_scan(spark: SparkSession, out_dir: str, column: str | None = None) -> DataFrame:
@@ -374,13 +396,17 @@ def _thin_scan(spark: SparkSession, out_dir: str, column: str | None = None) -> 
 
 def _admitted_rows(admit, budget: int | None):
     """mapInArrow body over the metadata scan: the (chunk_id, attempt) rows
-    `admit(chunk_id, nbuckets, m)` accepts — or, from a partition admitting
-    more than `budget` (None: unbounded) rows, one (None, None) row."""
+    `admit(chunk_id, nbuckets, m)` accepts (`m` None when the scan names no
+    column) — or, from a partition admitting more than `budget` (None:
+    unbounded) rows, one (None, None) row."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ids = []
         for b in batches:
-            cols = (b.column(c).to_pylist() for c in ("chunk_id", "attempt", "nbuckets", "m"))
+            cols = (
+                b.column(c).to_pylist() if c in b.schema.names else [None] * b.num_rows
+                for c in ("chunk_id", "attempt", "nbuckets", "m")
+            )
             ids += [(cid, att) for cid, att, nb, m in zip(*cols) if admit(cid, nb, m)]
         if budget is not None and len(ids) > budget:
             ids = [(None, None)]
@@ -392,17 +418,41 @@ def _admitted_rows(admit, budget: int | None):
     return fn
 
 
+def _earliest(rows) -> dict[str, int]:
+    """(chunk_id, attempt) rows → each chunk's earliest attempt."""
+    admitted: dict[str, int] = {}
+    for cid, att in rows:
+        admitted[cid] = min(att, admitted.get(cid, att))
+    return admitted
+
+
+def _table_types(type_lists) -> dict[str, str | None]:
+    """The distinct per-chunk (column, dtype) lists → {column: dtype}, merged
+    longest list first (ties by value), so both executors agree on the
+    column order whatever order their chunks arrive in. Conflicting dtypes
+    raise (_merge_types), and so does an extra column with no dtype."""
+    distinct = {tuple(tuple(p) for p in t) for t in type_lists}
+    types = _merge_types(p for t in sorted(distinct, key=lambda t: (-len(t), repr(t))) for p in t)
+    missing = [c for c, t in types.items() if t is None and c not in ALL_COLUMNS]
+    if missing:
+        raise ValueError(f"no dtype metadata for extra columns {missing}")
+    return types
+
+
 @dataclass(frozen=True)
 class TableMeta:
     """What a read op knows of a stored table before touching payloads: the
     `attempt=N` dirs, every stored column's dtype, and the chunks its
-    predicate admits with their earliest attempt (None past the cap)."""
+    predicate admits with their earliest attempt (None past the cap). Both
+    executors of table_meta return the same TableMeta; `spark` is None for
+    the Spark-free reader, which has no payload scan to build."""
 
     out_dir: str
     attempts: list[int]
     types: dict[str, str | None]
     admitted: dict[str, int] | None
-    thin: DataFrame
+    spark: SparkSession | None = None
+    column: str | None = None
     admit: object = None
 
     @property
@@ -411,15 +461,17 @@ class TableMeta:
 
     def payload_scan(self) -> DataFrame:
         ddl = encoded_schema_ddl(list(self.extras)) + ", attempt int"
-        return self.thin.sparkSession.read.schema(ddl).parquet(f"{self.out_dir}/encoded")
+        return self.spark.read.schema(ddl).parquet(f"{self.out_dir}/encoded")
 
     def pruned(self) -> DataFrame:
         """The payload scan of the admitted chunks, each at its earliest
         attempt — literal filters, so no dedup join; past the cap a
-        semi-join with the admitted frame, which never reaches the driver."""
+        semi-join with the admitted frame of a fresh metadata scan, which
+        never reaches the driver."""
         enc = self.payload_scan()
         if self.admitted is None:
-            keep = self.thin.drop("types").mapInArrow(_admitted_rows(self.admit, None), _ADMITTED_DDL)
+            thin = _thin_scan(self.spark, self.out_dir, self.column).drop("types")
+            keep = thin.mapInArrow(_admitted_rows(self.admit, None), _ADMITTED_DDL)
             keep = keep.groupBy("chunk_id").agg(F.min("attempt").alias("attempt"))
             return enc.join(keep, ["chunk_id", "attempt"], "left_semi")
         return enc.filter(
@@ -429,34 +481,136 @@ class TableMeta:
         )
 
 
-def table_meta(spark: SparkSession, out_dir: str, column: str | None = None, admit=None) -> TableMeta:
-    """The one metadata read of a read op: the attempt listing (driver-only)
-    plus ONE Spark job over the thin columns, which also evaluates the op's
-    pruning predicate `admit(chunk_id, nbuckets, m)` (`m`: `column`'s
-    metrics struct, None where a chunk has none). The driver receives the
-    observed dtype set and at most LOOKUP_ISIN_CAP admitted ids: each
-    partition returns its ids only within its share of the cap."""
-    try:
-        attempts = _encoded_attempts(spark, out_dir)
-    except Exception:
-        attempts = []  # a failed listing counts as many attempts
+def _driver_fs(spark: SparkSession | None, out_dir: str):
+    """(pyarrow filesystem, path of `{out_dir}/encoded`) when the driver can
+    read the table itself: a `file:` or scheme-less path (the latter only
+    under a local Hadoop default filesystem); None otherwise. Without a
+    session (the Spark-free reader) any filesystem pyarrow opens will do."""
+    scheme = urlparse(out_dir).scheme
+    if scheme == "file" or (not scheme and (
+        spark is None
+        or spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///").startswith("file:")
+    )):
+        path = out_dir[len("file:"):] if scheme else out_dir
+        return pafs.LocalFileSystem(), os.path.join(os.path.abspath(path), "encoded")
+    if spark is None:
+        return pafs.FileSystem.from_uri(f"{out_dir}/encoded")
+    return None
+
+
+def _list_encoded(fs: pafs.FileSystem, root: str, out_dir: str):
+    """`root` (= `{out_dir}/encoded`) → (its `attempt=N` dir numbers, its
+    data files as (path, attempt), their total bytes). Hidden and
+    `_`-prefixed entries are skipped, as Spark's scan skips them; an
+    attempt dir counts even with no data files, as in _encoded_attempts.
+    No table raises, naming the dir."""
+    if fs.get_file_info(root).type != pafs.FileType.Directory:
+        raise FileNotFoundError(f"no encoded table at {out_dir}/encoded")
+    attempts, files, nbytes = [], [], 0
+    for info in fs.get_file_info(pafs.FileSelector(root, recursive=True)):
+        parts = info.path[len(root):].strip("/").split("/")
+        if any(p.startswith((".", "_")) for p in parts):
+            continue
+        if info.type == pafs.FileType.File:
+            attempt = next((n for n in map(_attempt_number, parts[:-1]) if n is not None), None)
+            files.append((info.path, attempt))
+            nbytes += info.size
+        elif len(parts) == 1 and (n := _attempt_number(parts[0])) is not None:
+            attempts.append(n)
+    return sorted(attempts), sorted(files), nbytes
+
+
+def _thin_read(fs: pafs.FileSystem, path: str, column: str | None) -> pa.Table:
+    """One data file's thin columns (the top-level bloom only for `tokens`);
+    its payload columns stay unread."""
+    with fs.open_input_file(path) as f:
+        pf = pq.ParquetFile(f)
+        have = set(pf.schema_arrow.names)
+        want = ("chunk_id", "nbuckets", "columns", *(("bloom",) if column == "tokens" else ()))
+        return pf.read(columns=[c for c in want if c in have])
+
+
+def _thin_rows(t: pa.Table, column: str | None):
+    """One file's thin columns → per chunk (chunk_id, nbuckets, its (column,
+    dtype) pairs, m) as the Spark scan yields them: `m` is `column`'s
+    metrics with every COLMETA field (None where the file's struct lacks
+    it; for `tokens` the top-level bloom), or None."""
+    none = [None] * t.num_rows
+    cols = {
+        c: t.column(c).to_pylist() if c in t.column_names else none
+        for c in ("chunk_id", "nbuckets", "bloom", "columns")
+    }
+    for cid, nb, bloom, metrics in zip(cols["chunk_id"], cols["nbuckets"], cols["bloom"], cols["columns"]):
+        metrics = metrics or []
+        m = next((c for c in metrics if c.get("column") == column), None)
+        if m is not None:
+            m = {f: m.get(f) for f in _COLMETA_NAMES}
+            if column == "tokens":
+                m["bloom"] = bloom
+        yield cid, nb, tuple((c.get("column"), c.get("dtype")) for c in metrics), m
+
+
+def _driver_meta(spark, out_dir, fs, files, attempts, column, admit) -> TableMeta:
+    """Driver executor: read each listed file's thin columns with pyarrow
+    and call `admit` in-process. Past LOOKUP_ISIN_CAP admitted ids the
+    payload scan semi-joins in Spark (admitted None), as on the Spark
+    executor; a Spark-free caller keeps every id."""
+    type_lists, rows = set(), []
+    for path, attempt in files:
+        for cid, nb, types, m in _thin_rows(_thin_read(fs, path, column), column):
+            type_lists.add(types)
+            if admit is not None and admit(cid, nb, m):
+                rows.append((cid, attempt))
+    admitted = None if admit is None else _earliest(rows)
+    if spark is not None and admitted is not None and len(admitted) > LOOKUP_ISIN_CAP:
+        admitted = None
+    return TableMeta(out_dir, attempts, _table_types(type_lists), admitted, spark, column, admit)
+
+
+def _spark_meta(spark, out_dir, attempts, column, admit) -> TableMeta:
+    """Spark executor: ONE job over the thin columns that observes the
+    distinct (column, dtype) lists and runs `admit` in a mapInArrow. The
+    driver receives at most LOOKUP_ISIN_CAP admitted ids: each partition
+    returns its ids only within its share of the cap."""
     thin = _thin_scan(spark, out_dir, column)
     obs = Observation()
-    seen, admitted = thin.observe(obs, F.flatten(F.collect_set("types")).alias("t")), None
+    seen, admitted = thin.observe(obs, F.collect_set("types").alias("t")), None
     if admit is None:
         seen.write.format("noop").mode("overwrite").save()
     else:
         budget = LOOKUP_ISIN_CAP // max(1, thin._jdf.rdd().getNumPartitions())
         rows = seen.drop("types").mapInArrow(_admitted_rows(admit, budget), _ADMITTED_DDL).collect()
         if all(cid is not None for cid, _ in rows):
-            admitted = {}
-            for cid, att in rows:
-                admitted[cid] = min(att, admitted.get(cid, att))
-    types = _merge_types(obs.get["t"])
-    missing = [c for c, t in types.items() if t is None and c not in ALL_COLUMNS]
-    if missing:
-        raise ValueError(f"no dtype metadata for extra columns {missing}")
-    return TableMeta(out_dir, attempts, types, admitted, thin, admit)
+            admitted = _earliest(rows)
+    return TableMeta(out_dir, attempts, _table_types(obs.get["t"]), admitted, spark, column, admit)
+
+
+def table_meta(
+    spark: SparkSession | None, out_dir: str, column: str | None = None, admit=None
+) -> TableMeta:
+    """The one metadata read of a read op: list `encoded/` on the driver,
+    then read the thin columns once, which also evaluates the op's pruning
+    predicate `admit(chunk_id, nbuckets, m)` (`m`: `column`'s metrics
+    struct, None where a chunk has none).
+
+    The listing picks the executor: a local table (`file:` or scheme-less
+    path) of at most DRIVER_PLAN_MAX_BYTES data bytes is read on the driver
+    (no Spark job); any other table in one Spark job. `spark=None` (the
+    Spark-free reader) always reads on the driver and never caps the
+    admitted ids. A local path with no `encoded/` dir raises
+    FileNotFoundError naming it, on either executor."""
+    where = _driver_fs(spark, out_dir)
+    if where is not None:
+        fs, root = where
+        attempts, files, nbytes = _list_encoded(fs, root, out_dir)
+        if spark is None or nbytes <= DRIVER_PLAN_MAX_BYTES:
+            return _driver_meta(spark, out_dir, fs, files, attempts, column, admit)
+    else:
+        try:
+            attempts = _encoded_attempts(spark, out_dir)
+        except Exception:
+            attempts = []  # a failed listing counts as many attempts
+    return _spark_meta(spark, out_dir, attempts, column, admit)
 
 
 def _probe(convert, test):
@@ -706,8 +860,8 @@ def lookup(spark: SparkSession, out_dir: str, doc_ids: list[str]) -> DataFrame:
     Chunk assignment is a pure function of the data (`prefix # xxhash64(doc_id)
     % nbuckets`, chunking.py), and every chunk row carries its group's
     nbuckets — so the metadata scan admits a chunk exactly when its bucket
-    is some requested id's bucket (the ids' Spark xxhash64 values are
-    constant-folded on the driver, no job), and, when the chunk carries a
+    is some requested id's bucket (the ids' Spark xxhash64 values come from
+    catalyst's hash function over py4j, no query), and, when the chunk carries a
     doc_id membership filter (`set column doc_id bloom_filter true`), that
     filter admits at least one requested id — a candidate bucket holds
     ~n_rows/nbuckets unrelated docs, and without the filter each one pays a
@@ -716,8 +870,7 @@ def lookup(spark: SparkSession, out_dir: str, doc_ids: list[str]) -> DataFrame:
     """
     if not doc_ids:
         return decode(spark, out_dir).limit(0)
-    hashed = F.transform(F.array(*map(F.lit, doc_ids)), lambda d: F.xxhash64(d))
-    hashes = spark.sql("VALUES (1)").select(hashed).first()[0]
+    hashes = spark_xxhash64(spark, doc_ids)
     id_hashes = np.array([hash_string(d) for d in doc_ids], dtype=np.int64)
     buckets: dict[int, set[str]] = {}  # nbuckets → the ids' bucket numbers
 

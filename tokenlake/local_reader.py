@@ -4,9 +4,14 @@ The stored format is plain parquet + self-describing containers, so a
 consumer that just wants the rows back — a debugging notebook, a small
 downstream tool, a format-conformance check from another language runtime —
 must not need a JVM. This module is that proof: it replays decode_job's
-exact semantics (attempt dedup keeps each chunk's EARLIEST attempt;
-projected decode touches only the payload columns the caller asks for;
-doc_id-sorted rows within a chunk) with pyarrow.dataset as the scan layer.
+exact semantics (each chunk at its EARLIEST attempt; projected decode
+touches only the payload columns the caller asks for; doc_id-sorted rows
+within a chunk) with pyarrow.dataset as the scan layer.
+
+It plans through decode_job.table_meta's driver executor (`spark=None`):
+the same pyarrow read of the thin metadata columns the Spark read ops use
+on small local tables, which yields the stored columns and every chunk's
+earliest attempt — there is no second metadata reader or dedup here.
 
 Deliberately small-scale: everything streams through one process. The
 distributed path (decode_job.decode) is the production reader; this one
@@ -19,9 +24,7 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.dataset as ds
 
-from .decode_job import _decode_chunks, _payloads_for
-
-ROW_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
+from .decode_job import ALL_COLUMNS, _decode_chunks, _payloads_for, table_meta
 
 
 def read_encoded_local(
@@ -33,40 +36,22 @@ def read_encoded_local(
     other payload byte streams are never read from disk thanks to parquet
     column pruning). Default: every stored column, canonical order.
     """
-    dataset = ds.dataset(f"{out_dir}/encoded", format="parquet", partitioning="hive")
-    names = dataset.schema.names
-    stored = [n[len("payload_") :] for n in names if n.startswith("payload_")]
-    if columns is None:
-        cols = [*[c for c in ROW_COLUMNS if c in stored],
-                *[c for c in stored if c not in ROW_COLUMNS]]
-    else:
-        missing = [c for c in columns if c not in stored]
-        if missing:
-            raise ValueError(f"columns not in this table: {missing}; stored: {sorted(stored)}")
-        cols = list(columns)
-    need = _payloads_for(tuple(cols), dict.fromkeys(stored))
-
-    # attempt dedup, metrics-weight: scan only (chunk_id, attempt) first
-    if "attempt" in names:
-        keys = dataset.to_table(columns=["chunk_id", "attempt"])
-        first = keys.group_by("chunk_id").aggregate([("attempt", "min")])
-        keep = {
-            (c, a)
-            for c, a in zip(
-                first.column("chunk_id").to_pylist(),
-                first.column("attempt_min").to_pylist(),
-            )
-        }
-    else:
-        keep = None
-
-    scan_cols = [f"payload_{c}" for c in need] + (["chunk_id", "attempt"] if keep is not None else [])
-    parts: list[pa.Table] = []
-    for batch in dataset.to_batches(columns=scan_cols):
-        if keep is not None:
-            rows = zip(batch.column("chunk_id").to_pylist(), batch.column("attempt").to_pylist())
-            batch = batch.filter(pa.array([k in keep for k in rows], pa.bool_()))
-        parts.extend(_decode_chunks(batch, need, tuple(cols)))
-    if not parts:
+    meta = table_meta(None, out_dir, admit=lambda cid, nb, m: True)
+    if not meta.admitted:
         raise ValueError(f"no chunks found under {out_dir}/encoded")
+    if columns is None:
+        cols = [*[c for c in ALL_COLUMNS if c in meta.types], *meta.extras]
+    else:
+        missing = [c for c in columns if c not in meta.types]
+        if missing:
+            raise ValueError(f"columns not in this table: {missing}; stored: {sorted(meta.types)}")
+        cols = list(columns)
+    need = _payloads_for(tuple(cols), meta.extras)
+
+    dataset = ds.dataset(f"{out_dir}/encoded", format="parquet", partitioning="hive")
+    parts: list[pa.Table] = []
+    for batch in dataset.to_batches(columns=[f"payload_{c}" for c in need] + ["chunk_id", "attempt"]):
+        rows = zip(batch.column("chunk_id").to_pylist(), batch.column("attempt").to_pylist())
+        batch = batch.filter(pa.array([meta.admitted.get(c) == a for c, a in rows], pa.bool_()))
+        parts.extend(_decode_chunks(batch, need, tuple(cols)))
     return pa.concat_tables(parts)
