@@ -1,6 +1,7 @@
 """Read ops plan from one metadata read: job counts per executor, a
 payload-free metadata read, driver/Spark executor parity, lookup's id
-hashing, and Python workers that find the package on their own."""
+hashing, and Python workers that find the package on their own and start
+with its kernels imported."""
 
 import glob
 import os
@@ -78,6 +79,20 @@ def test_read_ops_job_counts(spark, bloom_table, executor):
     got, n = _jobs(spark, lambda: decode_job.scan_token(spark, out, token).count())
     assert n <= scan_max
     assert got == df.filter(F.array_contains("tokens", token)).count() > 0
+
+
+def test_two_attempt_decode_job_counts(spark, bloom_table, tables, executor):
+    """decode of a two-attempt table keeps each chunk at its earliest
+    attempt through the metadata read's admitted ids, not a dedup
+    semi-join: it plans in 0 / 1 jobs, and toArrow is one payload scan
+    (the semi-join's shuffle made it 3)."""
+    df, _ = bloom_table
+    out = tables["two_attempts"]
+    dec, planning = _jobs(spark, lambda: decode_job.decode(spark, out))
+    assert planning == {"driver": 0, "spark": 1}[executor]
+    got, n = _jobs(spark, lambda: dec.toArrow())
+    assert n == 1
+    assert got.num_rows == df.count()
 
 
 @pytest.mark.parametrize("column", [None, "tokens", "doc_id"])
@@ -242,21 +257,12 @@ def test_executors_agree_past_the_cap(spark, bloom_table, monkeypatch):
     assert _both(spark, monkeypatch, out, ops["lookup"])["driver"][3] == len(ids)
 
 
-def test_local_workers_import_the_package_without_pythonpath(tmp_path):
-    """A caller that imports tokenlake from its own sys.path (no PYTHONPATH
-    export, working directory elsewhere) still gets Python workers that can
-    unpickle tokenlake UDFs."""
-    script = tmp_path / "encode.py"
-    script.write_text(
-        f"import sys\nsys.path.insert(0, {REPO!r})\n"
-        "from tokenlake import encode_job\n"
-        "from tokenlake.schema import SEQUENCES_SPARK_SCHEMA, generate_sequences\n"
-        "from tokenlake.session import get_spark\n"
-        "spark = get_spark(master='local[1]')\n"
-        "tbl = generate_sequences(scale=0.002, profiles=['lowcard'], skew=False)\n"
-        "df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA)\n"
-        "print('chunks', encode_job.encode_dataframe(df).count())\n"
-    )
+def _run_script(tmp_path, body: str) -> str:
+    """Run `body` as a fresh Python process that imports tokenlake from its
+    own sys.path (no PYTHONPATH export, working directory elsewhere); its
+    stdout."""
+    script = tmp_path / "script.py"
+    script.write_text(f"import sys\nsys.path.insert(0, {REPO!r})\n" + body)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["TOKENLAKE_DRIVER_MEM"] = "512m"
     r = subprocess.run(
@@ -264,4 +270,40 @@ def test_local_workers_import_the_package_without_pythonpath(tmp_path):
         capture_output=True, text=True, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-4000:]
-    assert "chunks " in r.stdout
+    return r.stdout
+
+
+def test_local_workers_import_the_package_without_pythonpath(tmp_path):
+    """A caller that imports tokenlake from its own sys.path still gets
+    Python workers that can unpickle tokenlake UDFs."""
+    out = _run_script(tmp_path, (
+        "from tokenlake import encode_job\n"
+        "from tokenlake.schema import SEQUENCES_SPARK_SCHEMA, generate_sequences\n"
+        "from tokenlake.session import get_spark\n"
+        "spark = get_spark(master='local[1]')\n"
+        "tbl = generate_sequences(scale=0.002, profiles=['lowcard'], skew=False)\n"
+        "df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA)\n"
+        "print('chunks', encode_job.encode_dataframe(df).count())\n"
+    ))
+    assert "chunks " in out
+
+
+def test_local_workers_fork_with_the_kernels_loaded(tmp_path):
+    """Every Python worker of a local session starts with pandas and the
+    encode, decode and lint kernels already imported (forked from
+    tokenlake.daemon): a UDF that references no tokenlake code finds them
+    in sys.modules before its first pa.array() call, in each of 4 tasks."""
+    out = _run_script(tmp_path, (
+        "import pyarrow as pa\n"
+        "from tokenlake.session import get_spark\n"
+        "MODULES = ('pandas', 'tokenlake.encode_job', 'tokenlake.decode_job', 'tokenlake.lint_job')\n"
+        "def probe(batches):\n"
+        "    missing = [m for m in MODULES if m not in sys.modules]\n"
+        "    for _ in batches:\n"
+        "        pass\n"
+        "    yield pa.RecordBatch.from_pydict({'missing': [','.join(missing)]})\n"
+        "spark = get_spark(master='local[2]')\n"
+        "rows = spark.range(0, 8, numPartitions=4).mapInArrow(probe, 'missing string').collect()\n"
+        "print('missing', [r.missing for r in rows])\n"
+    ))
+    assert "missing ['', '', '', '']" in out, out

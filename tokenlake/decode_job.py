@@ -347,15 +347,12 @@ def decode(
 
     Duplicate chunk rows can only exist ACROSS attempts (one applyInArrow
     output row per chunk within an attempt; a crash-resume lands the
-    re-encode in a fresh attempt dir), so a table with a single attempt
-    partition (the overwhelmingly common case) skips the dedup semi-join
-    outright — the common case pays zero extra jobs for crash safety. A
-    listing that fails (non-FS sources) counts as many attempts."""
+    re-encode in a fresh attempt dir). A table of one attempt (the
+    overwhelmingly common case) reads every chunk; on any other, the
+    metadata read admits every chunk at its earliest attempt, so the
+    payload scan keeps each once with no dedup join below the cap."""
     meta = table_meta(spark, out_dir)
-    enc = meta.payload_scan()
-    if len(meta.attempts) != 1:
-        enc = dedup_attempts(enc)
-    return decode_dataframe(enc, columns, extra_types=meta.extras)
+    return decode_dataframe(meta.pruned(), columns, extra_types=meta.extras)
 
 
 # the thin per-chunk metadata every read op plans from (the reference's
@@ -467,8 +464,10 @@ class TableMeta:
         """The payload scan of the admitted chunks, each at its earliest
         attempt — literal filters, so no dedup join; past the cap a
         semi-join with the admitted frame of a fresh metadata scan, which
-        never reaches the driver."""
+        never reaches the driver. With no predicate, every chunk."""
         enc = self.payload_scan()
+        if self.admit is None:
+            return enc
         if self.admitted is None:
             thin = _thin_scan(self.spark, self.out_dir, self.column).drop("types")
             keep = thin.mapInArrow(_admitted_rows(self.admit, None), _ADMITTED_DDL)
@@ -597,19 +596,23 @@ def table_meta(
     path) of at most DRIVER_PLAN_MAX_BYTES data bytes is read on the driver
     (no Spark job); any other table in one Spark job. `spark=None` (the
     Spark-free reader) always reads on the driver and never caps the
-    admitted ids. A local path with no `encoded/` dir raises
-    FileNotFoundError naming it, on either executor."""
+    admitted ids. With no predicate, a table of other than one attempt
+    admits every chunk, so `pruned()` keeps each at its earliest attempt.
+    A local path with no `encoded/` dir raises FileNotFoundError naming
+    it, on either executor."""
     where = _driver_fs(spark, out_dir)
     if where is not None:
         fs, root = where
         attempts, files, nbytes = _list_encoded(fs, root, out_dir)
-        if spark is None or nbytes <= DRIVER_PLAN_MAX_BYTES:
-            return _driver_meta(spark, out_dir, fs, files, attempts, column, admit)
     else:
         try:
             attempts = _encoded_attempts(spark, out_dir)
         except Exception:
             attempts = []  # a failed listing counts as many attempts
+    if admit is None and len(attempts) != 1:
+        admit = lambda cid, nb, m: True  # noqa: E731
+    if where is not None and (spark is None or nbytes <= DRIVER_PLAN_MAX_BYTES):
+        return _driver_meta(spark, out_dir, fs, files, attempts, column, admit)
     return _spark_meta(spark, out_dir, attempts, column, admit)
 
 

@@ -4,6 +4,15 @@ Arrow execution + AQE (skew handling, partition coalescing) are load-bearing:
 every encode/decode kernel is an Arrow-native grouped UDF (applyInArrow), and AQE is the
 runtime half of the skew strategy (the planning half is n_tok-aware bucket
 fan-out in chunking.py).
+
+Local sessions fork their Python workers from tokenlake.daemon, which has
+imported pandas (pyarrow imports it on its first `pa.array()`, ≈ 0.5 s per
+process) and the kernels: Spark hands out idle workers first-in first-out,
+so with the stock daemon an op's tasks pay those imports on fresh workers.
+The deploy path (`master=""`) keeps the stock daemon: there `--py-files`
+reach a worker's sys.path only after the fork. The daemon imports before it
+forks, so those imports must stay side-effect-free (no threads, open files,
+py4j or SparkSession).
 """
 
 from __future__ import annotations
@@ -69,8 +78,10 @@ def get_spark(
         if master.startswith("local"):
             # local Python workers inherit the JVM's PYTHONPATH, not the
             # driver's sys.path: put this package's root on it so UDFs that
-            # reference tokenlake unpickle wherever the caller imported it
+            # reference tokenlake unpickle wherever the caller imported it,
+            # and so the daemon that forks them can preload the kernels
             builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+            builder = builder.config("spark.python.daemon.module", "tokenlake.daemon")
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
