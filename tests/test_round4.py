@@ -190,7 +190,7 @@ def test_generic_columns_roundtrip_bit_identical(spark, tmp_path):
     ).count()
     assert mismatches == 0
     # dtype metadata round-trips for the decode-schema discovery
-    et = decode_job.extra_types_of(decode_job.read_encoded(spark, out))
+    et = decode_job.table_meta(spark, out).extras
     assert et == {"value": "double", "ts": "timestamp_ntz",
                   "user_id": "bigint", "flag": "boolean"}
     # projected decode of a single extra column works and prunes

@@ -163,25 +163,7 @@ def test_append_with_diverged_extra_dtype_rejected(spark, tmp_path):
         encode_job.run(spark, bad, out, salt="b2")
     # identical types append fine
     encode_job.run(spark, df, out, salt="b3")
-    assert decode_job.extra_types_of(
-        decode_job.read_encoded(spark, out)
-    ) == {"value": "double"}
-
-
-def test_extra_types_of_raises_on_conflicting_dtypes(spark):
-    """A hand-mixed table storing two dtypes for one column must raise, not
-    silently pick one (the decode schema would disagree with half the
-    payloads)."""
-    a = spark.createDataFrame(
-        [("c1", [("v", "plain", "none", "double", 1, 0, 1, 1, "", 0, 1, 1, 0.0, 0.0, 0, None)], b"")],
-        f"chunk_id string, columns array<struct<{encode_job.COLMETA_FIELDS}>>, payload_v binary",
-    )
-    b = spark.createDataFrame(
-        [("c2", [("v", "plain", "none", "float", 1, 0, 1, 1, "", 0, 1, 1, 0.0, 0.0, 0, None)], b"")],
-        f"chunk_id string, columns array<struct<{encode_job.COLMETA_FIELDS}>>, payload_v binary",
-    )
-    with pytest.raises(ValueError, match="conflicting dtypes"):
-        decode_job.extra_types_of(a.unionByName(b))
+    assert decode_job.table_meta(spark, out).extras == {"value": "double"}
 
 
 # ------------------------------------------ pre-v3 metrics-struct tables
@@ -196,7 +178,7 @@ _OLD_COLMETA_FIELDS = (
 def _downgrade_to_pre_v3(spark, src, dst):
     """Rewrite an encoded table with the round-3 metrics struct (no dtype /
     null_count fields) — the shape of tables written before v3 metadata."""
-    enc = decode_job.dedup_attempts(decode_job.read_encoded(spark, src))
+    enc = decode_job.table_meta(spark, src).pruned()
     old = enc.withColumn(
         "columns",
         F.expr(
@@ -271,7 +253,7 @@ def test_list_extra_roundtrip_bit_identical(spark, tmp_path):
     out = str(tmp_path / "out")
     df = _emb_df(spark).cache()
     encode_job.run(spark, df, out, resume=False)
-    et = decode_job.extra_types_of(decode_job.read_encoded(spark, out))
+    et = decode_job.table_meta(spark, out).extras
     assert et == {"emb": "array<float>", "hist": "array<bigint>"}
     dec = decode_job.decode(spark, out)
     j = df.alias("a").join(dec.alias("b"), "doc_id")
@@ -412,7 +394,7 @@ def test_decimal_extra_roundtrip(spark, tmp_path):
         .cache()
     )
     encode_job.run(spark, df, out, resume=False)
-    et = decode_job.extra_types_of(decode_job.read_encoded(spark, out))
+    et = decode_job.table_meta(spark, out).extras
     assert et == {"price": "decimal(14,2)"}
     dec = decode_job.decode(spark, out)
     j = df.alias("a").join(dec.alias("b"), "doc_id")
@@ -674,18 +656,21 @@ def test_cli_rewrite_from_evidence(spark, tmp_path, capsys):
 
 # ------------------------------------------ de-forced broadcasts (AQE)
 
-def test_dedup_and_resume_joins_broadcast_via_aqe(spark, tmp_path):
+def test_dedup_and_resume_joins_broadcast_via_aqe(spark, tmp_path, monkeypatch):
     """The dedup/resume joins carry no forced broadcast hint (a ~1.5e7-chunk
     table would pin hundreds of MB per executor), but AQE still picks a
-    broadcast join at test scale."""
+    broadcast join at test scale. The dedup join is the earliest-attempt
+    semi-join a multi-attempt read takes past LOOKUP_ISIN_CAP."""
     import tokenlake.decode_job as dj
 
     out = str(tmp_path / "out")
     df = _df(spark, scale=0.005)
     encode_job.run(spark, df, out, resume=False, max_rows=64)
     encode_job.run(spark, df, out, salt="b2", max_rows=64)  # second attempt set
-    enc = decode_job.read_encoded(spark, out)
-    deduped = dj.dedup_attempts(enc)
+    monkeypatch.setattr(dj, "LOOKUP_ISIN_CAP", 0)
+    meta = dj.table_meta(spark, out)
+    assert meta.admitted is None  # past the cap: the semi-join path
+    deduped = meta.pruned()
     deduped.count()  # finalize AQE
     plan = deduped._jdf.queryExecution().executedPlan().toString()
     assert "ResolvedHint" not in plan
@@ -830,7 +815,7 @@ def test_decimal_and_list_through_compact(spark, tmp_path):
     dec = decode_job.decode(spark, dst)
     v = verify_bit_identical(df, dec)
     assert v["pass"], v
-    assert decode_job.extra_types_of(decode_job.read_encoded(spark, dst)) == {
+    assert decode_job.table_meta(spark, dst).extras == {
         "price": "decimal(12,2)", "emb": "array<float>",
     }
     df.unpersist()
@@ -890,7 +875,7 @@ def test_time_column_roundtrip(spark, tmp_path):
         ),
     ).cache()
     encode_job.run(spark, df, out_dir, resume=False)
-    et = decode_job.extra_types_of(decode_job.read_encoded(spark, out_dir))
+    et = decode_job.table_meta(spark, out_dir).extras
     assert et == {"t_of_day": "time(6)"}
     dec = decode_job.decode(spark, out_dir)
     j = df.alias("a").join(dec.alias("b"), "doc_id")
@@ -1352,7 +1337,7 @@ def test_decimal128_extra_end_to_end(spark, tmp_path):
     )
     encode_job.run(spark, df, out, resume=False)
     enc = decode_job.read_encoded(spark, out)
-    assert decode_job.extra_types_of(enc) == {"big_price": "decimal(38,4)"}
+    assert decode_job.table_meta(spark, out).extras == {"big_price": "decimal(38,4)"}
     dec = decode_job.decode(spark, out)
     j = df.alias("a").join(dec.alias("b"), "doc_id")
     assert j.count() == df.count()
@@ -1377,15 +1362,14 @@ def test_decimal128_extra_end_to_end(spark, tmp_path):
     lk = decode_job.lookup(spark, out, [doc])
     assert lk.count() >= 1
     # soundness: decoding ONLY admitted chunks still yields the probed row
-    pruned = decode_job.dedup_attempts(
-        enc.join(
-            decode_job.chunks_containing_value(spark, out, "big_price", probe),
-            "chunk_id",
-            "left_semi",
-        )
+    meta = decode_job.table_meta(spark, out)
+    pruned = meta.pruned().join(
+        decode_job.chunks_containing_value(spark, out, "big_price", probe),
+        "chunk_id",
+        "left_semi",
     )
     got = decode_job.decode_dataframe(
-        pruned, extra_types=decode_job.extra_types_of(enc)
+        pruned, extra_types=meta.extras
     ).filter(F.col("big_price") == F.lit(probe))
     assert got.count() >= 1
     df.unpersist()
@@ -1412,8 +1396,7 @@ def test_decimal128_list_extra_roundtrip(spark, tmp_path):
         .cache()
     )
     encode_job.run(spark, df, out, resume=False)
-    enc = decode_job.read_encoded(spark, out)
-    assert decode_job.extra_types_of(enc) == {"ledger": "array<decimal(38,6)>"}
+    assert decode_job.table_meta(spark, out).extras == {"ledger": "array<decimal(38,6)>"}
     dec = decode_job.decode(spark, out)
     j = df.alias("a").join(dec.alias("b"), "doc_id")
     assert j.count() == df.count()

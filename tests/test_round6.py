@@ -108,7 +108,7 @@ def test_append_allows_matching_ns_time_units(spark, tmp_path):
     encode_job.run(spark, df, out, resume=False)
     df2 = df.withColumn("doc_id", F.concat(F.lit("b-"), F.col("doc_id")))
     # salt namespaces the second append's chunk ids (same sources would
-    # otherwise collide and dedup_attempts would drop the newer rows)
+    # otherwise collide and the earliest-attempt read would drop the newer rows)
     encode_job.run(spark, df2, out, resume=False, salt="b")  # must not raise
     dec = decode_job.decode(spark, out)
     assert dec.count() == df.count() + df2.count()
@@ -300,9 +300,9 @@ def test_evidence_compression_enable_loop(spark, tmp_path):
     )
     # rewritten chunks actually store the forced outer
     from tokenlake.encode_job import column_metrics
-    from tokenlake.decode_job import dedup_attempts, read_encoded
+    from tokenlake.decode_job import table_meta
 
-    m = column_metrics(dedup_attempts(read_encoded(spark, dst)))
+    m = column_metrics(table_meta(spark, dst).pruned())
     outs = {r["outer"] for r in m.filter(F.col("column") == "tokens").collect()}
     # rewritten chunks store the forced outer; kept chunks (whose stored
     # trial said zstd would NOT pay) legitimately stay 'none' and do not
@@ -376,10 +376,10 @@ def test_evidence_compression_disable_loop(spark, tmp_path):
     r = encode_job.rewrite_from_evidence(spark, src, dst)
     assert r["rewritten_chunks"] > 0
 
-    from tokenlake.decode_job import dedup_attempts, read_encoded
+    from tokenlake.decode_job import table_meta
     from tokenlake.encode_job import column_metrics
 
-    m = column_metrics(dedup_attempts(read_encoded(spark, dst)))
+    m = column_metrics(table_meta(spark, dst).pruned())
     outs = {row["outer"] for row in m.filter(F.col("column") == "tokens").collect()}
     assert outs == {"none"}
     ev2 = lint_job.lint_encoded(spark, dst)
@@ -415,10 +415,8 @@ def test_r10_small_pages_lookup_decodes_o_doc_bytes(spark, tmp_path):
     directive path round-trips through the DSL text."""
     from tokenlake.decode_job import (
         decode_chunk_rows_for_ids,
-        dedup_attempts,
-        extra_types_of,
         lookup,
-        read_encoded,
+        table_meta,
     )
     from tokenlake.plan import Prescription, plan_from_r10
 
@@ -460,8 +458,8 @@ def test_r10_small_pages_lookup_decodes_o_doc_bytes(spark, tmp_path):
     # decoded-byte accounting, chunk-level: the knob drops the embedding
     # bytes a one-doc lookup touches by an order of magnitude
     def touched(out):
-        enc = dedup_attempts(read_encoded(spark, out))
-        et = extra_types_of(enc)
+        meta = table_meta(spark, out)
+        enc, et = meta.pruned(), meta.extras
         rows = enc.select("payload_doc_id", "payload_emb").collect()
         total = 0
         for r in rows:
@@ -576,7 +574,7 @@ def test_compact_preserves_blocked_layout(spark, tmp_path):
     sniff the stored FLAG_BLOCKED block_rows and reproduce it — otherwise
     a maintenance pass silently flattens the random-access layout."""
     from tokenlake.codecs.container import FLAG_BLOCKED
-    from tokenlake.decode_job import decode, dedup_attempts, read_encoded
+    from tokenlake.decode_job import decode, table_meta
     from tokenlake.plan import Prescription
 
     rng = np.random.default_rng(6)
@@ -605,7 +603,7 @@ def test_compact_preserves_blocked_layout(spark, tmp_path):
     r = encode_job.compact(spark, src, dst, max_rows=5000)
     assert r["merged_chunks"] > 0
 
-    enc = dedup_attempts(read_encoded(spark, dst))
+    enc = table_meta(spark, dst).pruned()
     heads = enc.select(F.substring(F.col("payload_emb"), 1, 16).alias("h")).collect()
     assert heads
     for row in heads:
@@ -755,10 +753,10 @@ def test_blocked_layout_survives_mixed_flat_chunks(spark, tmp_path):
     encode_job.run(spark, df := spark.createDataFrame(t), src, cfg=cfg, resume=False, max_rows=400)
 
     # the rare-source chunk is small enough to store a FLAT emb frame
-    from tokenlake.decode_job import dedup_attempts, read_encoded
+    from tokenlake.decode_job import table_meta
 
     heads = (
-        dedup_attempts(read_encoded(spark, src))
+        table_meta(spark, src).pruned()
         .select(F.substring(F.col("payload_emb"), 1, 16).alias("h"))
         .collect()
     )

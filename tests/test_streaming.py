@@ -190,7 +190,7 @@ def test_stream_then_compact_merges_batch_fragments(spark, stream_dirs, tmp_path
     pq.write_table(tbl, os.path.join(inp, "part2.parquet"))
     streaming.encode_stream(spark, inp, out).awaitTermination(120)
 
-    enc = decode_job.dedup_attempts(decode_job.read_encoded(spark, out))
+    enc = decode_job.table_meta(spark, out).pruned()
     chunks_before = enc.count()
     # every chunk is a batch fragment (two drops of small profiles)
     dest = str(tmp_path / "compacted")

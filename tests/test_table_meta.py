@@ -1,10 +1,12 @@
-"""Read ops plan from one metadata read: job counts per executor, a
-payload-free metadata read, driver/Spark executor parity, lookup's id
-hashing, and Python workers that find the package on their own and start
-with its kernels imported."""
+"""Ops plan from one metadata read: read and write job counts per
+executor, a payload-free metadata read, driver/Spark executor parity,
+lookup's id hashing, run()'s refusal on a failed listing, and Python
+workers that find the package on their own and start with its kernels
+imported."""
 
 import glob
 import os
+import shutil
 import subprocess
 import sys
 import uuid
@@ -15,7 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from tokenlake import chunking, decode_job, encode_job
+from tokenlake import chunking, decode_job, encode_job, lint_job
 from tokenlake.local_reader import read_encoded_local
 from tokenlake.plan import Prescription
 from tokenlake.schema import SEQUENCES_SPARK_SCHEMA, generate_sequences
@@ -307,3 +309,140 @@ def test_local_workers_fork_with_the_kernels_loaded(tmp_path):
         "print('missing', [r.missing for r in rows])\n"
     ))
     assert "missing ['', '', '', '']" in out, out
+
+
+# ------------------------------------------------ write ops
+
+@pytest.fixture(scope="module")
+def repro(spark, tmp_path_factory):
+    """A 19-chunk table (four sources, run(max_rows=60)) and a two-batch
+    copy of it (salts b1 and b2: 38 chunks over two attempts)."""
+    tbl = generate_sequences(
+        scale=0.02, seed=5, skew=False, profiles=["lowcard", "sorted_ts", "runs", "random"]
+    )
+    df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA).cache()
+    root = tmp_path_factory.mktemp("repro")
+    one, two = str(root / "one"), str(root / "two")
+    encode_job.run(spark, df, one, max_rows=60)
+    for salt in ("b1", "b2"):
+        encode_job.run(spark, df, two, max_rows=60, salt=salt)
+    return df, one, two
+
+
+def _lineage_totals(spark, out):
+    """The summary totals re-read from all of `lineage/`."""
+    r = spark.read.parquet(f"{out}/lineage").filter(F.col("status") == "complete").agg(
+        F.countDistinct("chunk_id"), F.sum("encoded_bytes"), F.sum("raw_bytes")
+    ).first()
+    return tuple(r)
+
+
+def _payloads(spark, out):
+    return {
+        r["chunk_id"]: bytes(r["payload_tokens"])
+        for r in spark.read.parquet(f"{out}/encoded").select("chunk_id", "payload_tokens").collect()
+    }
+
+
+def test_run_job_counts(spark, repro, tmp_path, executor):
+    """run() reads lineage in one aggregate and the table through
+    table_meta (one job on the Spark executor), and its summary adds the
+    lineage write's observed totals instead of re-reading lineage: a fresh
+    run takes ≤ 6 jobs, a resumed or appending one ≤ 12 / 13. The
+    summaries equal the totals of all of lineage."""
+    resumed_max = {"driver": 12, "spark": 13}[executor]
+    df, _, _ = repro
+    out = str(tmp_path / "out")
+    fresh, n = _jobs(spark, lambda: encode_job.run(spark, df, out, max_rows=60))
+    assert n <= 6
+    assert (fresh["chunks"], fresh["skipped_chunks"], fresh["attempt"]) == (19, 0, 1)
+    assert _lineage_totals(spark, out) == (19, fresh["encoded_bytes"], fresh["raw_bytes"])
+
+    resumed, n = _jobs(spark, lambda: encode_job.run(spark, df, out, max_rows=60))
+    assert n <= resumed_max
+    assert resumed == {**fresh, "skipped_chunks": 19, "attempt": 2}
+
+    appended, n = _jobs(spark, lambda: encode_job.run(spark, df, out, max_rows=60, salt="b2"))
+    assert n <= resumed_max
+    assert (appended["chunks"], appended["skipped_chunks"], appended["attempt"]) == (38, 19, 3)
+    assert appended["encoded_bytes"] == 2 * fresh["encoded_bytes"]
+    assert _lineage_totals(spark, out) == (38, appended["encoded_bytes"], appended["raw_bytes"])
+
+
+def test_lint_encoded_job_count(spark, repro, executor):
+    """lint_encoded reads the metrics through table_meta, each chunk at its
+    earliest attempt, with no dedup join: collecting it is 1 / 2 jobs."""
+    _, one, two = repro
+    for out in (one, two):
+        rows, n = _jobs(spark, lambda: lint_job.lint_encoded(spark, out).collect())
+        assert n <= {"driver": 1, "spark": 2}[executor]
+        assert len({r["chunk_id"] for r in rows}) == {one: 19, two: 38}[out]
+
+
+def test_compact_merges_only_sources_with_two_undersized_chunks(spark, repro, tmp_path, executor):
+    """The encoder buckets per source, so compact re-encodes only sources
+    with at least two undersized chunks. On the one-batch table each
+    undersized chunk is its source's only one: nothing is re-encoded and
+    every byte stays. On the two-batch table the same 3 sources hold 2
+    each: 6 merge into 3, in ≤ 28 / 31 jobs, and every kept chunk's
+    payload is byte-identical."""
+    df, one, two = repro
+    r = encode_job.compact(spark, one, str(tmp_path / "c1"), min_rows=45, max_rows=400)
+    assert (r["merged_chunks"], r["chunks_before"], r["chunks_after"]) == (0, 19, 19)
+    assert r["bytes_after"] == r["bytes_before"]
+    assert _payloads(spark, str(tmp_path / "c1")) == _payloads(spark, one)
+
+    dest = str(tmp_path / "c2")
+    r, n = _jobs(spark, lambda: encode_job.compact(spark, two, dest, min_rows=45, max_rows=400))
+    assert n <= {"driver": 28, "spark": 31}[executor]
+    assert (r["merged_chunks"], r["chunks_before"], r["chunks_after"]) == (6, 38, 35)
+    assert _lineage_totals(spark, dest)[:2] == (35, r["bytes_after"])
+    src, got = _payloads(spark, two), _payloads(spark, dest)
+    kept = [c for c in got if c in src]
+    assert len(kept) == 32 and all(got[c] == src[c] for c in kept)
+    assert decode_job.decode(spark, dest).count() == 2 * df.count()
+
+
+def test_rewrite_from_evidence_job_count(spark, repro, tmp_path, executor):
+    """rewrite_from_evidence on the two-batch table plans from table_meta
+    and run()'s lineage aggregate: ≤ 42 / 46 jobs, and kept payloads stay
+    byte-identical."""
+    df, _, two = repro
+    dest = str(tmp_path / "r2")
+    r, n = _jobs(spark, lambda: encode_job.rewrite_from_evidence(spark, two, dest))
+    assert n <= {"driver": 42, "spark": 46}[executor]
+    assert (r["chunks_total"], r["kept_chunks"], r["rewritten_chunks"]) == (38, 16, 22)
+    src, got = _payloads(spark, two), _payloads(spark, dest)
+    kept = [c for c in got if c in src]
+    assert len(kept) == 16 and all(got[c] == src[c] for c in kept)
+    assert decode_job.decode(spark, dest).count() == 2 * df.count()
+
+
+def _tree(root):
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+
+
+def test_run_refuses_to_pick_an_attempt_when_the_listing_fails(spark, repro, tmp_path, monkeypatch):
+    """run() must never reuse an attempt number, so a failed `encoded/`
+    listing raises before anything is written: on a local path the
+    listing's own error, on a non-local one (where table_meta reads a
+    failed listing as "many attempts") a refusal naming the dir."""
+    df, one, _ = repro
+    out = str(tmp_path / "out")
+    shutil.copytree(one, out)
+    before = _tree(out)
+
+    def fail(*a, **k):
+        raise OSError("listing failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(decode_job, "_list_encoded", fail)
+        with pytest.raises(OSError, match="listing failed"):
+            encode_job.run(spark, df, out, max_rows=60, salt="b2")
+    assert _tree(out) == before
+
+    monkeypatch.setattr(decode_job, "_driver_fs", lambda *a: None)
+    monkeypatch.setattr(decode_job, "_encoded_attempts", fail)
+    with pytest.raises(OSError, match=f"cannot list {out}/encoded"):
+        encode_job.run(spark, df, out, max_rows=60, salt="b2")
+    assert _tree(out) == before

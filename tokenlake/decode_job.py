@@ -204,41 +204,6 @@ def _decode_chunks(
             yield out
 
 
-def _merge_types(pairs) -> dict:
-    """(column, dtype) pairs → {column: dtype}, first-seen order. Two dtypes
-    for one column (an append that slipped past the schema guard, or a
-    hand-mixed table) raise: keeping one would declare a mapInArrow schema
-    half the payloads violate."""
-    types: dict = {}
-    for column, dtype in pairs:
-        if types.setdefault(column, dtype) != dtype:
-            raise ValueError(
-                f"column {column!r} stores conflicting dtypes "
-                f"{sorted({types[column], dtype})}; the table mixes incompatible "
-                "appends — re-encode it into a fresh out_dir"
-            )
-    return types
-
-
-def extra_types_of(encoded: DataFrame, strict: bool = True) -> dict[str, str]:
-    """Extra decoded columns and their Spark types, read from the chunk
-    metrics of any encoded frame (one aggregate over the metrics column —
-    payloads stay untouched; the read ops get the same from table_meta).
-    `strict=False` tolerates columns with no metrics rows yet (a
-    schema-only/empty table, e.g. the kept-set of an all-small compaction)
-    instead of raising; conflicting dtypes raise either way."""
-    payload_cols = [c[len("payload_") :] for c in encoded.columns if c.startswith("payload_")]
-    extras = [c for c in payload_cols if c not in ALL_COLUMNS]
-    if not extras:
-        return {}
-    pairs = F.arrays_zip(F.col("columns.column"), F.col("columns.dtype"))
-    types = _merge_types(encoded.agg(F.flatten(F.collect_set(pairs))).first()[0])
-    missing = [c for c in extras if c not in types]
-    if missing and strict:
-        raise ValueError(f"no dtype metadata for extra columns {missing}")
-    return {c: types[c] for c in extras if c in types}  # input-order
-
-
 def decode_dataframe(
     encoded: DataFrame,
     columns: tuple[str, ...] | list[str] | None = None,
@@ -249,8 +214,8 @@ def decode_dataframe(
     `columns` projects the decode: only the payload columns those outputs
     need are scanned (parquet column pruning skips the rest entirely) and
     decoded. Default = all four sequence columns plus any extras named in
-    `extra_types` (column → Spark DDL type; see extra_types_of /
-    decode() for the metadata-driven path). mapInArrow needs the output
+    `extra_types` (column → Spark DDL type; `table_meta(...).extras` is
+    the metadata-driven source). mapInArrow needs the output
     schema at plan time, which is why extras carry their type here even
     though each payload is self-describing at runtime."""
     return _decode_frame(encoded, columns, extra_types)
@@ -283,30 +248,6 @@ def _decode_frame(
     return encoded.select(*[f"payload_{p}" for p in need]).mapInArrow(fn, schema)
 
 
-def dedup_attempts(encoded: DataFrame) -> DataFrame:
-    """Drop duplicate chunk rows left by a crash between the encoded and
-    lineage writes followed by a resume (the duplicate lands in a later
-    `attempt=N` partition; content is deterministic). Keep each chunk's
-    earliest attempt. The dedup reads only (chunk_id, attempt) — parquet
-    column pruning keeps it metrics-weight — and rejoins as a left-semi
-    with NO forced broadcast hint: AQE picks broadcast at any realistic
-    scale (the keep side is two thin columns), while at the 10^12-row
-    design point (~1.5e7 chunks) a FORCED broadcast would pin hundreds of
-    MB on every executor; AQE can fall back to a shuffled semi-join of the
-    key columns only — payload bytes are never shuffled either way. No-op
-    (and plan-free) when the input has no attempt partition column (e.g.
-    the lazy output of encode_dataframe, which is duplicate-free by
-    construction)."""
-    if "attempt" not in encoded.columns:
-        return encoded
-    keep = (
-        encoded.select("chunk_id", "attempt")
-        .groupBy("chunk_id")
-        .agg(F.min("attempt").alias("attempt"))
-    )
-    return encoded.join(keep, ["chunk_id", "attempt"], "left_semi")
-
-
 def read_encoded(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/encoded")
 
@@ -324,15 +265,15 @@ def _attempt_number(name: str) -> int | None:
 def _encoded_attempts(spark: SparkSession, out_dir: str) -> list[int]:
     """The `attempt=N` partition numbers under `{out_dir}/encoded`, via the
     Hadoop FS API (one driver-side listStatus, no Spark job; file://,
-    hdfs://, s3a:// alike), or [] when the table does not exist. A dir
-    counts even when a crashed job committed no data files into it. Listing
-    errors propagate: encode must never reuse an attempt number, and decode
-    decides for itself what a failed listing means."""
+    hdfs://, s3a:// alike). A dir counts even when a crashed job committed
+    no data files into it. No table raises FileNotFoundError naming the
+    dir, as _list_encoded does; other listing errors propagate, and
+    table_meta decides what they mean."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/encoded")
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(p):
-        return []
+        raise FileNotFoundError(f"no encoded table at {out_dir}/encoded")
     names = (st.getPath().getName() for st in fs.listStatus(p))
     return [n for n in map(_attempt_number, names) if n is not None]
 
@@ -426,10 +367,19 @@ def _earliest(rows) -> dict[str, int]:
 def _table_types(type_lists) -> dict[str, str | None]:
     """The distinct per-chunk (column, dtype) lists → {column: dtype}, merged
     longest list first (ties by value), so both executors agree on the
-    column order whatever order their chunks arrive in. Conflicting dtypes
-    raise (_merge_types), and so does an extra column with no dtype."""
+    column order whatever order their chunks arrive in. Two dtypes for one
+    column (an append that slipped past run()'s guard, or a hand-mixed
+    table) raise: keeping one would declare a mapInArrow schema half the
+    payloads violate. So does an extra column with no dtype."""
     distinct = {tuple(tuple(p) for p in t) for t in type_lists}
-    types = _merge_types(p for t in sorted(distinct, key=lambda t: (-len(t), repr(t))) for p in t)
+    types: dict[str, str | None] = {}
+    for column, dtype in (p for t in sorted(distinct, key=lambda t: (-len(t), repr(t))) for p in t):
+        if types.setdefault(column, dtype) != dtype:
+            raise ValueError(
+                f"column {column!r} stores conflicting dtypes "
+                f"{sorted({types[column], dtype})}; the table mixes incompatible "
+                "appends — re-encode it into a fresh out_dir"
+            )
     missing = [c for c, t in types.items() if t is None and c not in ALL_COLUMNS]
     if missing:
         raise ValueError(f"no dtype metadata for extra columns {missing}")
@@ -438,14 +388,15 @@ def _table_types(type_lists) -> dict[str, str | None]:
 
 @dataclass(frozen=True)
 class TableMeta:
-    """What a read op knows of a stored table before touching payloads: the
-    `attempt=N` dirs, every stored column's dtype, and the chunks its
-    predicate admits with their earliest attempt (None past the cap). Both
-    executors of table_meta return the same TableMeta; `spark` is None for
-    the Spark-free reader, which has no payload scan to build."""
+    """What an op knows of a stored table before touching payloads: the
+    `attempt=N` dirs (None when a non-local listing failed), every stored
+    column's dtype, and the chunks its predicate admits with their earliest
+    attempt (None past the cap). Both executors of table_meta return the
+    same TableMeta; `spark` is None for the Spark-free reader, which has no
+    payload scan to build."""
 
     out_dir: str
-    attempts: list[int]
+    attempts: list[int] | None
     types: dict[str, str | None]
     admitted: dict[str, int] | None
     spark: SparkSession | None = None
@@ -587,7 +538,7 @@ def _spark_meta(spark, out_dir, attempts, column, admit) -> TableMeta:
 def table_meta(
     spark: SparkSession | None, out_dir: str, column: str | None = None, admit=None
 ) -> TableMeta:
-    """The one metadata read of a read op: list `encoded/` on the driver,
+    """The one metadata read of an op: list `encoded/` on the driver,
     then read the thin columns once, which also evaluates the op's pruning
     predicate `admit(chunk_id, nbuckets, m)` (`m`: `column`'s metrics
     struct, None where a chunk has none).
@@ -596,10 +547,12 @@ def table_meta(
     path) of at most DRIVER_PLAN_MAX_BYTES data bytes is read on the driver
     (no Spark job); any other table in one Spark job. `spark=None` (the
     Spark-free reader) always reads on the driver and never caps the
-    admitted ids. With no predicate, a table of other than one attempt
-    admits every chunk, so `pruned()` keeps each at its earliest attempt.
-    A local path with no `encoded/` dir raises FileNotFoundError naming
-    it, on either executor."""
+    admitted ids. With no predicate, a table of several attempts (or whose
+    listing failed) admits every chunk, so `pruned()` keeps each at its
+    earliest attempt.
+    No `encoded/` dir raises FileNotFoundError naming it. A failed local
+    listing raises; a failed non-local one leaves `attempts` None, which
+    reads treat as many attempts and run() refuses."""
     where = _driver_fs(spark, out_dir)
     if where is not None:
         fs, root = where
@@ -607,9 +560,11 @@ def table_meta(
     else:
         try:
             attempts = _encoded_attempts(spark, out_dir)
+        except FileNotFoundError:
+            raise
         except Exception:
-            attempts = []  # a failed listing counts as many attempts
-    if admit is None and len(attempts) != 1:
+            attempts = None
+    if admit is None and (attempts is None or len(attempts) > 1):
         admit = lambda cid, nb, m: True  # noqa: E731
     if where is not None and (spark is None or nbytes <= DRIVER_PLAN_MAX_BYTES):
         return _driver_meta(spark, out_dir, fs, files, attempts, column, admit)

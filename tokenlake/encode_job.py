@@ -24,10 +24,10 @@ import zlib
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .chunking import MAX_CHUNK_ROWS, MAX_CHUNK_VALUES, assign_chunks, plan_buckets
-from .codecs import codec_of, encode_int_column
+from .codecs import codec_of, decode_column_arrow, encode_int_column
 from .codecs.bitio import sorted_factorize
 from .codecs.bloom import build_bloom, hash_strings
 from .codecs.container import (
@@ -170,9 +170,6 @@ def encoded_arrow_schema(extras: list[str] | tuple[str, ...] = ()) -> pa.Schema:
         ]
     )
 
-
-ENCODED_SCHEMA = encoded_schema_ddl()
-ENCODED_ARROW_SCHEMA = encoded_arrow_schema()
 
 LINEAGE_SCHEMA = (
     "chunk_id string, input_fingerprint string, status string, "
@@ -721,8 +718,14 @@ def column_metrics(encoded: DataFrame) -> DataFrame:
     null_count fields in the columns struct) still read — dtype is coalesced
     from the codec family exactly as the container layer's v2 fallback
     implies it (unwrap(): str codecs → string, else int; tokens → array<int>)
-    and null_count reads 0 (pre-v3 tables could not store nulls)."""
+    and null_count reads 0 (pre-v3 tables could not store nulls). A field
+    that reads null counts as absent: that is how an explicit-schema read
+    (table_meta's payload scan) sees a field the file predates."""
     meta_fields = set(encoded.schema["columns"].dataType.elementType.fieldNames())
+
+    def stored(field: str, absent):
+        return F.coalesce(F.col(f"c.{field}"), absent) if field in meta_fields else absent
+
     base = encoded.select(
         "chunk_id",
         "n_rows",
@@ -745,16 +748,13 @@ def column_metrics(encoded: DataFrame) -> DataFrame:
         F.col("c.column").alias("column"),
         F.col("c.codec").alias("codec"),
         F.col("c.outer").alias("outer"),
-        (
-            F.col("c.dtype")
-            if "dtype" in meta_fields
-            else F.when(F.col("c.codec").startswith("str_"), F.lit("string"))
+        stored(
+            "dtype",
+            F.when(F.col("c.codec").startswith("str_"), F.lit("string"))
             .when(F.col("c.column") == "tokens", F.lit("array<int>"))
-            .otherwise(F.lit("int"))
+            .otherwise(F.lit("int")),
         ).alias("dtype"),
-        (
-            F.col("c.null_count") if "null_count" in meta_fields else F.lit(0).cast("long")
-        ).alias("null_count"),
+        stored("null_count", F.lit(0).cast("long")).alias("null_count"),
         F.col("c.n_values").alias("n_values"),
         F.col("c.encoded_bytes").alias("encoded_bytes"),
         F.col("c.raw_bytes").alias("raw_bytes"),
@@ -763,18 +763,11 @@ def column_metrics(encoded: DataFrame) -> DataFrame:
         F.col("c.max_val").alias("max_val"),
         F.col("c.distinct_est").alias("distinct_est"),
         F.col("c.elapsed_ms").alias("elapsed_ms"),
-        (
-            F.col("c.outer_trial_ratio")
-            if "outer_trial_ratio" in meta_fields
-            else F.lit(0.0)  # pre-r6 tables: no stored trial → no evidence
-        ).alias("outer_trial_ratio"),
-        (
-            F.col("c.block_rows")
-            if "block_rows" in meta_fields
-            # pre-knob tables can hold no blocked frames (field and flag
-            # shipped in the same format rev) → 0 ⇒ flat is exact
-            else F.lit(0)
-        ).cast("long").alias("block_rows"),
+        # pre-r6 tables: no stored trial → no evidence
+        stored("outer_trial_ratio", F.lit(0.0)).alias("outer_trial_ratio"),
+        # pre-knob tables can hold no blocked frames (field and flag shipped
+        # in the same format rev) → 0 ⇒ flat is exact
+        stored("block_rows", F.lit(0)).cast("long").alias("block_rows"),
         (
             (F.col("chunk_has_bloom") & (F.col("c.column") == "tokens"))
             | (
@@ -824,7 +817,8 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     stats" are the stored min/max/ndv metrics), plus the
     file-level max_chunk_rows from the largest chunk (infer_max_row_group_size,
     fix.rs:95-103). ONE aggregate over the metadata (single scan);
-    O(#columns × #codecs) rows reach the driver, never O(#chunks).
+    O(#columns × #codecs) rows reach the driver, never O(#chunks). The
+    metadata comes from table_meta, each chunk at its earliest attempt.
 
     Stats-presence detection rides the format's own invariants, mirroring the
     reference's presence-not-value checks: a chunk with data always stores
@@ -833,7 +827,9 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     (encode_chunk). source stores no per-chunk stats in either mode, so its
     level is left at the default — same as the reference returning None when
     a column carries no evidence (fix.rs:139-144)."""
-    enc = column_metrics(spark.read.parquet(f"{out_dir}/encoded"))
+    from .decode_job import table_meta
+
+    enc = column_metrics(table_meta(spark, out_dir).pruned())
 
     # any stats-bearing column (canonical or extra, scalar or list element)
     # stores distinct_est ≥ 1 when it has data and stats are on — the dtype
@@ -956,6 +952,28 @@ def plan_from_encoded(spark: SparkSession, out_dir: str) -> EncodeConfig:
     return cfg
 
 
+def _lineage(spark: SparkSession, lin_path: str):
+    """(done chunk ids, totals) from the one read of `lineage/`, under
+    LINEAGE_SCHEMA (no inference job): `totals` is one aggregate — the
+    complete chunks (distinct ids), their byte sums and the max attempt,
+    all 0 when there is no lineage yet (done ids None). Existence is
+    checked on the Hadoop FS rather than by a failing read, whose failure
+    event the session's Observation listener logs as an error."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(lin_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        return None, dict.fromkeys(("chunks", "encoded_bytes", "raw_bytes", "attempt"), 0)
+    lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lin_path)
+    complete = F.col("status") == "complete"
+    totals = lin.agg(
+        F.count_distinct(F.when(complete, F.col("chunk_id"))).alias("chunks"),
+        F.sum(F.when(complete, F.col("encoded_bytes"))).alias("encoded_bytes"),
+        F.sum(F.when(complete, F.col("raw_bytes"))).alias("raw_bytes"),
+        F.max("attempt").alias("attempt"),
+    ).first()
+    done = lin.filter(complete).select("chunk_id").distinct()
+    return done, {k: v or 0 for k, v in totals.asDict().items()}
+
+
 def run(
     spark: SparkSession,
     df: DataFrame,
@@ -970,7 +988,11 @@ def run(
 
     Returns a summary dict (chunks encoded, bytes, skipped-on-resume).
     `salt` namespaces chunk ids (streaming passes the micro-batch id).
+    An existing table is planned from one lineage aggregate and the read
+    ops' metadata read (decode_job.table_meta).
     """
+    from .decode_job import _stored_dtype_code, table_meta
+
     enc_path = f"{out_dir}/encoded"
     lin_path = f"{out_dir}/lineage"
 
@@ -980,118 +1002,83 @@ def run(
     buckets = plan_buckets(df, cfg.max_chunk_rows or max_rows, cfg.effective_max_values(max_values))
     chunked = assign_chunks(df, buckets, salt=salt)
 
-    attempt = 1
-    done: DataFrame | None = None
+    done, before = _lineage(spark, lin_path)
     try:
-        existing = spark.read.parquet(lin_path)
-        done = existing.filter(F.col("status") == "complete").select("chunk_id").distinct()
-        attempt = int(existing.agg(F.max("attempt")).first()[0] or 0) + 1
-    except Exception:
-        done = None
-    # reconcile with the ENCODED table's attempt dirs: a crash between the
-    # encoded write and the lineage write leaves a committed attempt=N dir
-    # with no lineage row — a lineage-only derivation would reuse N and
-    # APPEND duplicate chunk rows into the same partition, which
-    # dedup_attempts (min attempt per chunk) cannot remove. Skipping past
-    # every existing dir keeps the re-encode in a fresh attempt, where the
-    # dedup works as designed.
-    from .decode_job import _encoded_attempts
+        meta = table_meta(spark, out_dir)
+    except FileNotFoundError:
+        meta = None
+    if meta is not None and meta.attempts is None:
+        raise OSError(
+            f"cannot list {enc_path}; refusing to pick an attempt number "
+            "that may already hold chunks"
+        )
+    # the attempt counter skips past every existing encoded dir, not just
+    # lineage's: a crash between the encoded write and the lineage write
+    # leaves a committed attempt=N dir with no lineage row, and reusing N
+    # would APPEND duplicate chunk rows into that partition, which no
+    # earliest-attempt read can remove
+    attempt = max([before["attempt"], *(meta.attempts if meta else ())]) + 1
 
-    enc_max = max(_encoded_attempts(spark, out_dir), default=None)
-    if enc_max is not None and enc_max >= attempt:
-        attempt = enc_max + 1
-
-    if done is not None or enc_max is not None:
-        # an existing encoded table — whether it has lineage or not (a
-        # direct-Arrow attempt dir, or a crash between the encoded and
-        # lineage writes, leaves attempt dirs with no lineage rows) — must
-        # pass the append-compatibility guards below. Appending a DIFFERENT
-        # column set would leave attempt dirs with divergent parquet
-        # schemas; a later read picks one footer and the other attempts'
-        # extra payloads silently vanish. Refuse up front.
-        try:
-            stored = spark.read.parquet(enc_path)
-            have = {
-                c[len("payload_") :] for c in stored.columns if c.startswith("payload_")
-            }
-        except Exception:
-            stored, have = None, None
-        want = {*PAYLOAD_COLUMNS, *extras}
-        if have is not None and have != want:
+    if meta is not None and meta.types:
+        # an existing table with chunks — lineage or not (a direct-Arrow
+        # attempt dir, or a crash between the encoded and lineage writes,
+        # leaves attempt dirs with no lineage rows) — must take the append:
+        # the same metrics struct, the same columns, the same dtypes. A
+        # different column set would leave attempt dirs with divergent
+        # parquet schemas, and an inferred read picks one footer
+        _require_current_metrics_struct(spark, out_dir, "append")
+        have, want = set(meta.types), {*PAYLOAD_COLUMNS, *extras}
+        if have != want:
             raise ValueError(
                 f"existing table at {out_dir!r} stores columns {sorted(have)} "
                 f"but the input carries {sorted(want)}; appends must match the "
                 "stored schema (use a new out_dir for a different shape)"
             )
-        if stored is not None:
-            # same NAMES is not enough: an extra whose type changed (double →
-            # float) would store divergent dtype metadata across attempts and
-            # decode would declare one mapInArrow schema while half the
-            # payloads carry the other type (round-4 advice). Compare dtypes.
-            meta_fields = set(stored.schema["columns"].dataType.elementType.fieldNames())
-            if "dtype" not in meta_fields:
+        # same NAMES is not enough: an extra whose type changed (double →
+        # float) would store divergent dtype metadata across attempts and
+        # decode would declare one mapInArrow schema while half the
+        # payloads carry the other type
+        diverged = {
+            c: (meta.types[c], df.schema[c].dataType.simpleString()) for c in extras
+        }
+        diverged = {c: si for c, si in diverged.items() if si[0] != si[1]}
+        if diverged:
+            raise ValueError(
+                f"append type mismatch at {out_dir!r}: "
+                + ", ".join(
+                    f"{c} is stored as {s!r} but the input carries {i!r}"
+                    for c, (s, i) in sorted(diverged.items())
+                )
+                + "; cast the input to the stored types or use a new out_dir"
+            )
+        # the metrics DDL erases the TIME tick unit (all four units store as
+        # 'time(6)'), and the zone-map / bloom probes sniff the unit from ONE
+        # chunk's frame header and apply it column-wide — so an append must
+        # not mix tick units under a matching DDL. Spark's TIME(p)
+        # interchanges as time64[ns] (container.py:57), so a table whose
+        # existing chunks store any other carrier (a direct-Arrow attempt
+        # written with time64[us]/time32) cannot take a Spark append.
+        from .codecs.container import DT_TIME_MS, DT_TIME_NS, DT_TIME_S, DT_TIME_US
+
+        _unit = {DT_TIME_NS: "time64[ns]", DT_TIME_US: "time64[us]",
+                 DT_TIME_MS: "time32[ms]", DT_TIME_S: "time32[s]"}
+        for c in extras:
+            if "time(6)" not in meta.types[c]:
+                continue
+            code = _stored_dtype_code(spark, out_dir, c)
+            if code is not None and code != DT_TIME_NS:
                 raise ValueError(
-                    f"existing table at {out_dir!r} predates per-column dtype "
-                    "metadata; appending would mix metrics-struct schemas in "
-                    "one table — re-encode it (decode + run into a fresh "
-                    "out_dir) before appending"
+                    f"append tick-unit mismatch at {out_dir!r}: column "
+                    f"{c!r} stores {_unit.get(code, code)!r} "
+                    "carriers but a Spark TIME(p) append would store "
+                    "time64[ns]; mixed units under one 'time(6)' DDL "
+                    "would mis-scale zone-map and bloom probes — "
+                    "re-encode into a fresh out_dir instead"
                 )
-            _require_current_metrics_struct(stored, "append")
-            if extras:
-                from .decode_job import extra_types_of
-
-                # non-strict: a schema-only table (empty kept-set of an
-                # all-small compaction) has no metrics rows to compare yet
-                stored_types = extra_types_of(stored, strict=False)
-                input_types = {
-                    c: df.schema[c].dataType.simpleString() for c in extras
-                }
-                diverged = {
-                    c: (stored_types[c], input_types[c])
-                    for c in extras
-                    if c in stored_types and stored_types[c] != input_types[c]
-                }
-                if diverged:
-                    raise ValueError(
-                        f"append type mismatch at {out_dir!r}: "
-                        + ", ".join(
-                            f"{c} is stored as {s!r} but the input carries {i!r}"
-                            for c, (s, i) in sorted(diverged.items())
-                        )
-                        + "; cast the input to the stored types or use a new out_dir"
-                    )
-                # the metrics DDL erases the TIME tick unit (all four units
-                # store as 'time(6)'), and the zone-map / bloom probes sniff
-                # the unit from ONE chunk's frame header and apply it column-
-                # wide — so an append must not mix tick units under a
-                # matching DDL. Spark's TIME(p) interchanges as time64[ns]
-                # (container.py:57), so a table whose existing chunks store
-                # any other carrier (a direct-Arrow attempt written with
-                # time64[us]/time32) cannot take a Spark append.
-                from .codecs.container import (
-                    DT_TIME_MS, DT_TIME_NS, DT_TIME_S, DT_TIME_US,
-                )
-                from .decode_job import _stored_dtype_code
-
-                _unit = {DT_TIME_NS: "time64[ns]", DT_TIME_US: "time64[us]",
-                         DT_TIME_MS: "time32[ms]", DT_TIME_S: "time32[s]"}
-                for c, ddl in stored_types.items():
-                    if "time(6)" not in ddl or c not in extras:
-                        continue
-                    code = _stored_dtype_code(spark, out_dir, c)
-                    if code is not None and code != DT_TIME_NS:
-                        raise ValueError(
-                            f"append tick-unit mismatch at {out_dir!r}: column "
-                            f"{c!r} stores {_unit.get(code, code)!r} "
-                            "carriers but a Spark TIME(p) append would store "
-                            "time64[ns]; mixed units under one 'time(6)' DDL "
-                            "would mis-scale zone-map and bloom probes — "
-                            "re-encode into a fresh out_dir instead"
-                        )
 
     skipped = 0
     if resume and done is not None:
-        skipped = done.count()
+        skipped = before["chunks"]
         # no forced broadcast: AQE broadcasts the done-set while it is small
         # and falls back to a shuffled anti-join at the 10^12-row design
         # point (~1.5e7 finished chunk ids would be a several-hundred-MB
@@ -1109,25 +1096,28 @@ def run(
     # lineage is derived from the committed encoded table (checkpoint follows
     # data; a crash between the two writes only re-encodes, never corrupts).
     # Explicit schema: a fully-skipped resume writes zero data files, which
-    # schema inference would reject.
+    # schema inference would reject. The write observes this attempt's
+    # totals, so the summary adds them to the lineage read's instead of
+    # re-reading all of lineage.
     committed = spark.read.schema(enc_ddl).parquet(f"{enc_path}/attempt={attempt}")
-    lineage = lineage_from_encoded(committed, attempt)
-    lineage.write.mode("append").parquet(lin_path)
-
-    summary = (
-        spark.read.parquet(lin_path)
-        .filter(F.col("status") == "complete")
-        .agg(
-            F.countDistinct("chunk_id").alias("chunks"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-        )
-        .first()
-    )
+    added = Observation()
+    lineage_from_encoded(committed, attempt).observe(
+        added,
+        F.count(F.lit(1)).alias("chunks"),
+        F.sum("encoded_bytes").alias("encoded_bytes"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+    ).write.mode("append").parquet(lin_path)
+    if resume or done is None:
+        # a resume anti-joins the done set away, so the new chunks are new
+        new = added.get
+        totals = {k: before[k] + (new[k] or 0) for k in ("chunks", "encoded_bytes", "raw_bytes")}
+    else:
+        # without resume the new attempt may repeat done chunks: count the union
+        totals = _lineage(spark, lin_path)[1]
     return {
-        "chunks": summary["chunks"],
-        "encoded_bytes": summary["encoded_bytes"],
-        "raw_bytes": summary["raw_bytes"],
+        "chunks": totals["chunks"],
+        "encoded_bytes": totals["encoded_bytes"],
+        "raw_bytes": totals["raw_bytes"],
         "skipped_chunks": skipped,
         "attempt": attempt,
     }
@@ -1156,29 +1146,35 @@ def _write_chunks(df: DataFrame, path: str, mode: str) -> None:
     ).parquet(path)
 
 
-def _require_current_metrics_struct(enc: DataFrame, op: str) -> None:
+def _require_current_metrics_struct(spark: SparkSession, out_dir: str, op: str) -> None:
     """Refuse to mix metrics-struct schemas in one table. run() checks it
     before appending; compact and rewrite_from_evidence copy kept chunk
     rows verbatim and then run() re-encodes the rest — a source table with
     an OLDER metrics struct would pass the copy, then trip run()'s guard
     AFTER dest was wiped, leaving a plausible-looking table that silently
     lacks the re-encoded chunks. _open_source checks it up front, before
-    any destructive step."""
+    any destructive step.
+
+    This is the one footer-schema read the writers keep: table_meta reads
+    under the current schema, where a struct field a file lacks reads as
+    null, so only a footer shows the struct a table was written with."""
+    enc = spark.read.parquet(f"{out_dir}/encoded")
     meta_fields = set(enc.schema["columns"].dataType.elementType.fieldNames())
     current = {f.name for f in _COLMETA_ARROW}
     if meta_fields != current:
+        old = "" if "dtype" in meta_fields else "it predates per-column dtype metadata; "
         raise ValueError(
-            f"the table stores a different metrics-struct shape "
-            f"({sorted(meta_fields ^ current)} differ); {op} would mix struct "
-            "schemas — re-encode the table (decode + run into a fresh "
+            f"the table at {out_dir!r} stores a different metrics-struct shape "
+            f"({sorted(meta_fields ^ current)} differ); {old}{op} would mix "
+            "struct schemas — re-encode the table (decode + run into a fresh "
             "out_dir) first"
         )
 
 
-def _open_source(spark: SparkSession, src_dir: str, dest_dir: str, op: str) -> DataFrame:
-    """The deduped source table of a dest-replacing op (`compact`,
-    `rewrite`), refused before any destructive step when it cannot be
-    rewritten safely.
+def _open_source(spark: SparkSession, src_dir: str, dest_dir: str, op: str):
+    """The source table's TableMeta for a dest-replacing op (`compact`,
+    `rewrite`) — `pruned()` reads each chunk at its earliest attempt —
+    refused before any destructive step when it cannot be rewritten safely.
 
     dest must be disjoint from src: the op wipes dest up front, so an
     in-place invocation (`compact out/ -o out/`) — or a dest nested inside
@@ -1187,7 +1183,7 @@ def _open_source(spark: SparkSession, src_dir: str, dest_dir: str, op: str) -> D
     older metrics struct is refused too (_require_current_metrics_struct)."""
     import os
 
-    from .decode_job import dedup_attempts, read_encoded
+    from .decode_job import table_meta
 
     s = os.path.abspath(src_dir).rstrip("/")
     d = os.path.abspath(dest_dir).rstrip("/")
@@ -1196,29 +1192,31 @@ def _open_source(spark: SparkSession, src_dir: str, dest_dir: str, op: str) -> D
             f"{op} dest_dir {dest_dir!r} overlaps src_dir {src_dir!r}; "
             f"{op} replaces dest and must never touch src"
         )
-    enc = dedup_attempts(read_encoded(spark, src_dir))
-    _require_current_metrics_struct(enc, op)
-    return enc
+    _require_current_metrics_struct(spark, src_dir, op)
+    return table_meta(spark, src_dir)
 
 
 def _copy_kept_reencode_rest(
     spark: SparkSession,
     src_dir: str,
     dest_dir: str,
-    enc: DataFrame,
+    extras: dict[str, str],
     kept: DataFrame,
     groups: list[tuple[DataFrame, EncodeConfig, str]],
     max_rows: int,
     max_values: int,
-) -> None:
-    """Replace dest_dir with the `kept` chunk rows of `enc`, copied
-    verbatim, plus every `(part, cfg, salt_prefix)` group re-encoded — the
+) -> dict | None:
+    """Replace dest_dir with the `kept` chunk rows, copied verbatim, plus
+    every `(part, cfg, salt_prefix)` group re-encoded — the
     preserve-untouched rewrite (fix.rs:25-70) at CHUNK granularity.
+    `extras` are the source's extra columns and types (TableMeta.extras).
+    Returns the last run()'s summary, which totals dest's lineage, or None
+    when there is no group.
 
     - dest is wiped first: a prior (possibly crashed) run's attempt=2 files
       would survive the attempt=1 overwrite, and the re-encode would then
       APPEND a second copy of every re-encoded chunk at the same
-      (chunk_id, attempt) — a duplicate dedup_attempts cannot remove.
+      (chunk_id, attempt) — a duplicate no earliest-attempt read can remove.
     - kept chunks are a scan→write with no shuffle: payload bytes stay
       byte-identical and their lineage rows are carried over.
     - each group's rows are decoded (shuffle-free mapInArrow), persisted —
@@ -1228,27 +1226,27 @@ def _copy_kept_reencode_rest(
       ids. An unsalted or fixed-salt re-encode could re-derive a chunk id
       that collides with a kept chunk of the same source (bucket numbering
       restarts at 0 over the group) or with one from an earlier pass, and
-      dedup_attempts would then silently drop one of two different chunks.
-      The digest makes a re-run of the same pass derive the same ids
-      (resume-safe); distinct prefixes keep groups apart even under digest
-      collisions. Lookups stay exact: candidates are re-derived per
-      (prefix, nbuckets) row, as for streaming-salted chunks.
+      the earliest-attempt read would then silently drop one of two
+      different chunks. The digest makes a re-run of the same pass derive
+      the same ids (resume-safe); distinct prefixes keep groups apart even
+      under digest collisions. Lookups stay exact: candidates are
+      re-derived per (prefix, nbuckets) row, as for streaming-salted chunks.
     """
     from pyspark import StorageLevel
 
-    from .decode_job import decode_dataframe, extra_types_of
+    from .decode_job import decode_dataframe
 
     dest_path = spark._jvm.org.apache.hadoop.fs.Path(dest_dir)
     fs = dest_path.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(dest_path):
         fs.delete(dest_path, True)
 
-    body_cols = [c for c in enc.columns if c != "attempt"]
+    body_cols = [c for c in kept.columns if c != "attempt"]
     _write_chunks(kept.select(*body_cols), f"{dest_dir}/encoded/attempt=1", "overwrite")
     # kept ids from the source frame, not a read-back: an empty kept set
     # writes zero files and schema inference would reject the dir
     kept_lineage = (
-        spark.read.parquet(f"{src_dir}/lineage")
+        spark.read.schema(LINEAGE_SCHEMA).parquet(f"{src_dir}/lineage")
         .filter(F.col("status") == "complete")
         .dropDuplicates(["chunk_id"])
         # no forced broadcast: a mostly-kept rewrite at the 10^12-row design
@@ -1260,17 +1258,17 @@ def _copy_kept_reencode_rest(
     )
     kept_lineage.write.mode("overwrite").parquet(f"{dest_dir}/lineage")
 
-    extra_types = extra_types_of(enc)
+    summary = None
     for part, cfg, salt_prefix in groups:
         digest = (
             part.agg(F.sum(F.xxhash64("chunk_id").cast("decimal(38,0)")).alias("d"))
             .first()["d"]
         )
-        rows = decode_dataframe(part, extra_types=extra_types).persist(
+        rows = decode_dataframe(part, extra_types=extras).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            run(
+            summary = run(
                 spark,
                 rows,
                 dest_dir,
@@ -1282,6 +1280,7 @@ def _copy_kept_reencode_rest(
             )
         finally:
             rows.unpersist()
+    return summary
 
 
 # the stored-evidence verdicts rewrite_from_evidence re-encodes on — the
@@ -1325,7 +1324,8 @@ def rewrite_from_evidence(
     from .lint_job import lint_encoded
     from .plan import Prescription
 
-    enc = _open_source(spark, src_dir, dest_dir, "rewrite")
+    meta = _open_source(spark, src_dir, dest_dir, "rewrite")
+    enc = meta.pruned()
 
     # persisted: the verdict frame is consulted several times below (flagged
     # ids, signatures, majority votes, one filter per signature group) and
@@ -1400,7 +1400,7 @@ def rewrite_from_evidence(
 
     n_flagged = flagged.count()
     _copy_kept_reencode_rest(
-        spark, src_dir, dest_dir, enc,
+        spark, src_dir, dest_dir, meta.extras,
         kept=enc.join(flagged, "chunk_id", "left_anti"),
         groups=groups,
         max_rows=MAX_CHUNK_ROWS,
@@ -1416,6 +1416,16 @@ def rewrite_from_evidence(
         "flagged_columns": flagged_cols,
         "verdict_groups": len(sigs),
     }
+
+
+def _chunk_sources(batches):
+    """mapInArrow body: (chunk_id, payload_source) rows → (chunk_id, source).
+    assign_chunks routes one source to a chunk, so its first value names it."""
+    for b in batches:
+        first = [decode_column_arrow(p)[0].as_py() for p in b.column("payload_source").to_pylist()]
+        yield pa.record_batch(
+            [b.column("chunk_id"), pa.array(first, pa.string())], names=["chunk_id", "source"]
+        )
 
 
 def compact(
@@ -1441,9 +1451,13 @@ def compact(
       from the metrics columns alone (no payload read); both caps are
       checked because a chunk can be row-small yet token-full, and
       re-encoding it would buy nothing.
+    - only sources with at least two undersized chunks are re-encoded: the
+      encoder buckets per source, so a source's lone small chunk merges
+      with nothing and is kept. A chunk's source is read from its source
+      payload (a chunk id cannot name it: sources and salts may hold '#').
     - kept chunks are copied verbatim — payload bytes byte-identical, their
       lineage rows carried over.
-    - undersized chunks are decoded and re-encoded through the normal
+    - merged chunks are decoded and re-encoded through the normal
       checkpointed path, with the table's codec/outer/bloom/statistics
       preserved via plan_from_encoded unless an explicit cfg overrides them.
 
@@ -1452,41 +1466,49 @@ def compact(
     Returns {chunks_before, kept_chunks, merged_chunks, chunks_after,
     bytes_before, bytes_after}.
     """
-    enc = _open_source(spark, src_dir, dest_dir, "compact")
+    meta = _open_source(spark, src_dir, dest_dir, "compact")
+    enc = meta.pruned()
     if min_rows is None:
         min_rows = max_rows // 2
     undersized = (F.col("n_rows") < min_rows) & (F.col("n_values") < max_values // 2)
-    if cfg is None:
-        cfg = plan_from_encoded(spark, src_dir)
-        # the inferred max_chunk_rows is the max over EXISTING chunks — on a
-        # mostly-small table that would re-create small chunks; the compaction
-        # target is the caller's max_rows
-        cfg.max_chunk_rows = max_rows
-    _copy_kept_reencode_rest(
-        spark, src_dir, dest_dir, enc,
-        kept=enc.filter(~undersized),
-        groups=[(enc.filter(undersized), cfg, "c")],
-        max_rows=max_rows,
-        max_values=max_values,
-    )
-
     before = enc.agg(
         F.count("*").alias("chunks"),
         F.sum("encoded_bytes").alias("bytes"),
         F.sum(F.when(undersized, 1).otherwise(0)).alias("small"),
     ).first()
-    after = (
-        spark.read.parquet(f"{dest_dir}/lineage")
-        .filter(F.col("status") == "complete")
-        .agg(F.countDistinct("chunk_id").alias("chunks"), F.sum("encoded_bytes").alias("bytes"))
-        .first()
+    # one row per source with a single undersized chunk: O(#sources) rows
+    # reach the driver, never O(#chunks)
+    lone = [
+        r["chunk_id"]
+        for r in enc.filter(undersized)
+        .select("chunk_id", "payload_source")
+        .mapInArrow(_chunk_sources, "chunk_id string, source string")
+        .groupBy("source")
+        .agg(F.count("*").alias("n"), F.min("chunk_id").alias("chunk_id"))
+        .filter(F.col("n") == 1)
+        .collect()
+    ]
+    merge = undersized & ~F.col("chunk_id").isin(lone)
+    n_merge = int(before["small"] or 0) - len(lone)
+    if cfg is None and n_merge:
+        cfg = plan_from_encoded(spark, src_dir)
+        # the inferred max_chunk_rows is the max over EXISTING chunks — on a
+        # mostly-small table that would re-create small chunks; the compaction
+        # target is the caller's max_rows
+        cfg.max_chunk_rows = max_rows
+    after = _copy_kept_reencode_rest(
+        spark, src_dir, dest_dir, meta.extras,
+        kept=enc.filter(~merge),
+        groups=[(enc.filter(merge), cfg, "c")] if n_merge else [],
+        max_rows=max_rows,
+        max_values=max_values,
     )
-    n_small = int(before["small"] or 0)
+    chunks, nbytes = int(before["chunks"]), int(before["bytes"] or 0)
     return {
-        "chunks_before": int(before["chunks"]),
-        "kept_chunks": int(before["chunks"]) - n_small,
-        "merged_chunks": n_small,
-        "chunks_after": int(after["chunks"]),
-        "bytes_before": int(before["bytes"] or 0),
-        "bytes_after": int(after["bytes"] or 0),
+        "chunks_before": chunks,
+        "kept_chunks": chunks - n_merge,
+        "merged_chunks": n_merge,
+        "chunks_after": int(after["chunks"]) if after else chunks,
+        "bytes_before": nbytes,
+        "bytes_after": int(after["encoded_bytes"]) if after else nbytes,
     }

@@ -510,12 +510,12 @@ def lint_encoded(spark: SparkSession, out_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .codecs.container import OUTER_KEEP_RATIO
-    from .decode_job import dedup_attempts, read_encoded
+    from .decode_job import table_meta
     from .encode_job import column_metrics
     from .outer_policy import RATIO_SKIP
     from .select import DICT_ENABLE_RATIO, DICT_PAGE_SIZE_MAX, DICT_REJECT_RATIO
 
-    m = column_metrics(dedup_attempts(read_encoded(spark, out_dir)))
+    m = column_metrics(table_meta(spark, out_dir).pruned())
     int_kind = (
         F.col("dtype").isin(
             "int", "bigint", "smallint", "tinyint",
@@ -624,13 +624,15 @@ def lint_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     chunk-located — the Location::RowGroup analog (diagnostic.rs:37-41)."""
     from pyspark.sql import functions as F
 
+    from .encode_job import LINEAGE_SCHEMA
+
     enc = (
         spark.read.parquet(f"{out_dir}/encoded")
         .select("chunk_id", "input_fingerprint")
         .distinct()
     )
     lin = (
-        spark.read.parquet(f"{out_dir}/lineage")
+        spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_dir}/lineage")
         .filter(F.col("status") == "complete")
         .select("chunk_id", F.col("input_fingerprint").alias("lin_fp"))
         .distinct()
