@@ -118,9 +118,10 @@ def test_plain_fallback_keeps_a_payload_smaller_than_plain():
 
 
 def test_prescription_is_one_aggregate(spark):
-    """The prescription reduces the lint decisions with one grouped
-    aggregate: at most 4 Spark jobs (AQE stages included), not one
-    collect per rule."""
+    """The prescription folds lint's decisions on the driver: lint returns
+    a local frame, so it launches no Spark job, and it names a column's
+    encoding only where every linted chunk picked the same codec — here
+    not `tokens`, whose sources want dict, delta and plain."""
     tbl = generate_sequences(scale=0.02, profiles=["lowcard", "sorted_ts", "random"], skew=False)
     df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA)
     decisions = lint_job.lint(spark, df, fraction=0.3)
@@ -131,5 +132,10 @@ def test_prescription_is_one_aggregate(spark):
         rx = lint_job.prescription_from_decisions(decisions)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
-    assert "set column tokens encoding" in rx.format()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    codecs: dict[str, set] = {}
+    for r in decisions.collect():
+        codecs.setdefault(r["column"], set()).add(r["codec"])
+    named = {d.column for d in rx.directives if d.prop == "encoding"}
+    assert named == {c for c, s in codecs.items() if len(s) == 1}
+    assert len(codecs["tokens"]) == 3 and "tokens" not in named

@@ -500,11 +500,23 @@ def test_prescription_dictionary_growth(spark):
         "set file max_chunk_rows 250",
     ]
 
-    # a 1:1 codec tie goes to the smaller codec name, whatever the row order
+    # an encoding is named only where every linted chunk agrees: a 1:1
+    # codec tie names none, whatever the row order
     tie = [mkrow(0, codec="rle", chunk="c#0"), mkrow(0, codec="delta", chunk="c#1")]
     for rows in (tie, tie[::-1]):
         d = spark.createDataFrame(rows, schema=lint_job.LINT_SCHEMA)
-        assert lint_job.prescription_from_decisions(d).format() == "set column tokens encoding delta"
+        assert lint_job.prescription_from_decisions(d).format() == ""
+    agree = [mkrow(0, codec="delta", chunk=f"c#{i}") for i in range(3)]
+    d = spark.createDataFrame(agree, schema=lint_job.LINT_SCHEMA)
+    assert lint_job.prescription_from_decisions(d).format() == "set column tokens encoding delta"
+    # R1 still keys on the majority codec: two dict chunks of three grow
+    # the page limit, with no encoding directive
+    split = [mkrow(5 << 20, chunk="c#0"), mkrow(5 << 20, chunk="c#1"),
+             mkrow(0, codec="for", chunk="c#2")]
+    d = spark.createDataFrame(split, schema=lint_job.LINT_SCHEMA)
+    assert lint_job.prescription_from_decisions(d).format() == (
+        f"set column tokens dictionary_page_size_limit {8 << 20}"
+    )
 
     # the driver fold does not depend on how the decisions are partitioned
     mixed = spark.createDataFrame(
@@ -522,9 +534,14 @@ def test_prescription_dictionary_growth(spark):
 def test_cli_lint_gate_and_prescription(spark, tmp_path):
     from tokenlake import cli
 
-    tbl = generate_sequences(scale=0.02, profiles=["lowcard", "random"], skew=False)
+    # two lowcard sources: every chunk's tokens pick dict, so the exported
+    # prescription names that encoding (it names one only where all agree)
+    df = spark.createDataFrame(
+        generate_sequences(scale=0.02, profiles=["lowcard"], skew=False).to_pandas(),
+        schema=SEQUENCES_SPARK_SCHEMA,
+    )
     in_p = str(tmp_path / "in.parquet")
-    spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA).write.parquet(in_p)
+    df.unionByName(df.withColumn("source", F.lit("lowcard_b"))).write.parquet(in_p)
     rx_p = str(tmp_path / "rx.txt")
     # lowcard leaves >50% on the table → warning → exit 1 (the CI gate)
     code = cli.main(
@@ -532,7 +549,7 @@ def test_cli_lint_gate_and_prescription(spark, tmp_path):
     )
     assert code == 1
     text = open(rx_p).read()
-    assert "set column tokens encoding" in text
+    assert "set column tokens encoding dict" in text
     # severity filter + rule filter paths run; a typo'd rule name must
     # fail LOUDLY (it used to silently filter to zero rows and weaken the
     # CI gate to exit 0)

@@ -2,6 +2,8 @@
 plan_from_encoded stats-none+bloom inference, lint deep-pass fraction),
 then null support, generic columns, BSS, and str_prefix as they land."""
 
+import math
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -74,12 +76,34 @@ def test_lint_deep_pass_skips_saturated_sources(spark):
 
 
 def test_lint_two_pass_no_global_window(spark):
-    """The ambiguous-chunk selection must not funnel all chunk ids through a
-    single-partition row_number window (straggler at millions of chunks)."""
-    df = _df(spark, scale=0.05, profiles=("lowcard", "highcard", "smallrange"))
-    d = lint_job.lint(spark, df, fraction=0.3)
+    """The ambiguous-chunk selection is the reference's stride as a hash
+    threshold, `pmod(xxhash64(chunk_id), n_amb) < k` plus the hash-min
+    chunk, picked on the driver: no single-partition row_number window (a
+    straggler at millions of chunks), and the returned decisions are a
+    local scan. smallrange's ~30 k-value chunks screen below the deep
+    fraction with an ambiguous cardinality ratio, so the deep pass runs;
+    its chunks are the ones sampled at exactly `fraction`."""
+    fraction = 0.9
+    df = _df(spark, scale=0.05, profiles=("lowcard", "smallrange"))
+    d = lint_job.lint(spark, df, fraction=fraction, max_values=30_000)
     plan = d._jdf.queryExecution().executedPlan().toString()
-    assert "row_number" not in plan.lower()
+    assert "LocalTableScan" in plan and "row_number" not in plan.lower()
+
+    rows = d.collect()
+    covered = {r["chunk_id"] for r in rows if r["sample_fraction"] == fraction}
+    # every ambiguous chunk of a source screened below `fraction`: those the
+    # deep pass replaced plus those still carrying their screening rows
+    amb = covered | {
+        r["chunk_id"] for r in rows
+        if 0.1 < r["cardinality_ratio"] < 0.5 and r["sample_fraction"] < fraction
+    }
+    n_amb, k = len(amb), math.ceil(len(amb) * lint_job.AMBIGUOUS_SAMPLE_RATIO)
+    ids = spark.createDataFrame([(c,) for c in sorted(amb)], "chunk_id string")
+    strided = ids.filter(F.pmod(F.xxhash64("chunk_id"), F.lit(n_amb)) < k)
+    first = ids.orderBy(F.xxhash64("chunk_id")).limit(1)
+    want = {r["chunk_id"] for r in strided.unionByName(first).collect()}
+    assert n_amb > 1 and covered == want, (sorted(amb), sorted(covered), sorted(want))
+    assert len(covered) < n_amb  # a stride, not every ambiguous chunk
 
 
 # ------------------------------------------ nulls through the codec stack

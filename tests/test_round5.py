@@ -80,9 +80,11 @@ def test_lint_encoded_all_null_tokens_chunk_is_ok(spark, tmp_path):
     assert rules == {"ok"}
 
 
-def _fake_encoded_with_metrics(spark, out, colmeta_rows):
+def _fake_encoded_with_metrics(spark, out, colmeta_rows, **fields):
     """Write a minimal encoded table whose `columns` metrics are fabricated
-    (payloads never read by the evidence lint)."""
+    (payloads never read by the evidence lint), as one file directly under
+    `encoded/`, outside any `attempt=N` dir. `fields` override the row's
+    other fields (a real chunk's payloads, say)."""
     row = {
         "chunk_id": "s#0", "n_rows": 1, "n_values": 1, "encoded_bytes": 1,
         "raw_bytes": 1, "doc_id_min": "", "doc_id_max": "", "stats_exact": False,
@@ -90,6 +92,7 @@ def _fake_encoded_with_metrics(spark, out, colmeta_rows):
         "columns": colmeta_rows,
         "payload_tokens": b"", "payload_n_tok": b"", "payload_doc_id": b"",
         "payload_source": b"",
+        **fields,
     }
     import os
 
@@ -98,6 +101,35 @@ def _fake_encoded_with_metrics(spark, out, colmeta_rows):
     t = pa.Table.from_pylist([row], schema=encode_job.encoded_arrow_schema())
     os.makedirs(f"{out}/encoded", exist_ok=True)
     pq.write_table(t, f"{out}/encoded/part-0.parquet")
+
+
+@pytest.mark.parametrize("limit", [1 << 62, -1], ids=["driver", "spark"])
+def test_flat_encoded_dir_lookup_and_scan_token(spark, tmp_path, monkeypatch, limit):
+    """A table whose one file sits outside `attempt=N` dirs has no attempts:
+    the pruning predicate of lookup and scan_token admits its chunk with a
+    null attempt on both table_meta executors, and both ops return the
+    right rows."""
+    monkeypatch.setattr(decode_job, "DRIVER_PLAN_MAX_BYTES", limit)
+    t = generate_sequences(scale=0.002, profiles=["lowcard"], skew=False)
+    # one chunk as the encode UDF receives it: Spark hands arrays over as
+    # list<int32>, not the generator's large_list
+    t = t.set_column(1, "tokens", t.column("tokens").cast(pa.list_(pa.int32())))
+    t = t.append_column("chunk_id", pa.array(["lowcard#0"] * t.num_rows)).append_column(
+        "nbuckets", pa.array([1] * t.num_rows, pa.int32())
+    )
+    row = encode_job.encode_chunk(t).to_pylist()[0]
+    out = str(tmp_path / "out")
+    _fake_encoded_with_metrics(spark, out, row.pop("columns"), **row)
+    meta = decode_job.table_meta(spark, out, admit=lambda *a: True)
+    assert (meta.attempts, meta.admitted) == ([], {"lowcard#0": None})
+
+    want = t.to_pylist()
+    doc, tok = want[0]["doc_id"], want[0]["tokens"][0]
+    got = decode_job.lookup(spark, out, [doc, "no-such-doc"]).collect()
+    assert [(r["doc_id"], r["tokens"]) for r in got] == [(doc, want[0]["tokens"])]
+    hits = decode_job.scan_token(spark, out, tok).collect()
+    assert sorted(r["doc_id"] for r in hits) == sorted(r["doc_id"] for r in want if tok in r["tokens"])
+    assert len(hits) > 1
 
 
 def _meta(column, dtype, codec, n_values, distinct_est, null_count=0):

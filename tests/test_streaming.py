@@ -56,6 +56,38 @@ def test_stream_encode_two_drops_bit_identical(spark, stream_dirs):
     assert len(salts) >= 2  # two micro-batches
 
 
+def test_stream_input_dir_checked_on_the_filesystem(spark, tmp_path, monkeypatch):
+    """encode_stream decides "missing or no data files → canonical schema"
+    on the Hadoop FS, with no failing footer read: once an Observation has
+    run in the session, as every run() does, its listener logs each failed
+    query as an error. A dir of hidden files only streams nothing; a missing
+    dir is refused by Spark's file stream itself, as before."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tokenlake import encode_job
+    from tokenlake.schema import SEQUENCES_SPARK_SCHEMA
+
+    tbl = generate_sequences(scale=0.002, profiles=["lowcard"], skew=False)
+    df = spark.createDataFrame(tbl.to_pandas(), schema=SEQUENCES_SPARK_SCHEMA)
+    encode_job.run(spark, df, str(tmp_path / "table"))
+    reads, real = [], DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, *p, **k: reads.append(p) or real(self, *p, **k)
+    )
+    empty = tmp_path / "empty"
+    (empty / "_hidden").mkdir(parents=True)
+    (empty / "_SUCCESS").touch()
+    (empty / "_hidden" / "part-0.parquet").touch()
+    q = streaming.encode_stream(spark, str(empty), str(tmp_path / "o1"))
+    q.awaitTermination(120)
+    assert q.exception() is None and not (tmp_path / "o1" / "encoded").exists()
+    missing = str(tmp_path / "missing")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        streaming.encode_stream(spark, missing, str(tmp_path / "o2"))
+    assert reads == []
+
+
 def test_dedup_stream_cross_batch_state(spark, stream_dirs):
     """Streaming dedup: a second micro-batch that is a strict content subset
     of the first must contribute ZERO output rows — the seen state survives

@@ -348,13 +348,13 @@ def test_run_job_counts(spark, repro, tmp_path, executor):
     """run() reads lineage in one aggregate and the table through
     table_meta (one job on the Spark executor), and its summary adds the
     lineage write's observed totals instead of re-reading lineage: a fresh
-    run takes ≤ 6 jobs, a resumed or appending one ≤ 12 / 13. The
+    run takes ≤ 5 jobs, a resumed or appending one ≤ 11 / 12. The
     summaries equal the totals of all of lineage."""
-    resumed_max = {"driver": 12, "spark": 13}[executor]
+    resumed_max = {"driver": 11, "spark": 12}[executor]
     df, _, _ = repro
     out = str(tmp_path / "out")
     fresh, n = _jobs(spark, lambda: encode_job.run(spark, df, out, max_rows=60))
-    assert n <= 6
+    assert n <= 5
     assert (fresh["chunks"], fresh["skipped_chunks"], fresh["attempt"]) == (19, 0, 1)
     assert _lineage_totals(spark, out) == (19, fresh["encoded_bytes"], fresh["raw_bytes"])
 
@@ -367,6 +367,24 @@ def test_run_job_counts(spark, repro, tmp_path, executor):
     assert (appended["chunks"], appended["skipped_chunks"], appended["attempt"]) == (38, 19, 3)
     assert appended["encoded_bytes"] == 2 * fresh["encoded_bytes"]
     assert _lineage_totals(spark, out) == (38, appended["encoded_bytes"], appended["raw_bytes"])
+
+
+def test_ingest_lifecycle_job_counts(spark, repro, tmp_path):
+    """lint → prescription → run() in ≤ 10 jobs. Two-pass lint builds its
+    decisions on the driver from its totals and its screening pass, with no
+    checkpoint, count or orderBy job, in ≤ 5; no source here screens below
+    the deep fraction, so no deep pass runs. The prescription folds lint's
+    local frame in 0 jobs, and a fresh run() takes ≤ 5."""
+    df, _, _ = repro
+    d, n = _jobs(spark, lambda: lint_job.lint(spark, df, max_rows=60))
+    assert n <= 5
+    rows, n = _jobs(spark, d.collect)
+    assert n == 0 and min(r["sample_fraction"] for r in rows) > 0.05
+    rx, n = _jobs(spark, lambda: lint_job.prescription_from_decisions(d))
+    assert n == 0
+    out = str(tmp_path / "out")
+    summary, n = _jobs(spark, lambda: encode_job.run(spark, df, out, cfg=rx.apply(), max_rows=60))
+    assert n <= 5 and summary["chunks"] == 19
 
 
 def test_lint_encoded_job_count(spark, repro, executor):

@@ -225,7 +225,6 @@ def cmd_lint(args, spark=None) -> int:
         decisions = lint_job.lint(spark, df, fraction=args.fraction)
         if args.rules:
             decisions = decisions.filter(F.col("rule").isin(_parse_rules(args.rules)))
-        decisions = decisions.cache()
         rows = decisions.collect()
         floor = SEVERITY_RANK[args.severity]
         shown = [r for r in rows if SEVERITY_RANK.get(r["severity"], 0) >= floor]
@@ -243,7 +242,6 @@ def cmd_lint(args, spark=None) -> int:
             print(f"prescription written to {args.prescription_out}")
         # exit 1 on warnings/errors — the CI gate (lib.rs:48-52)
         gate = any(SEVERITY_RANK.get(r["severity"], 0) >= 1 for r in rows)
-        decisions.unpersist()
         return 1 if gate else 0
     finally:
         if own:

@@ -356,11 +356,13 @@ def _admitted_rows(admit, budget: int | None):
     return fn
 
 
-def _earliest(rows) -> dict[str, int]:
-    """(chunk_id, attempt) rows → each chunk's earliest attempt."""
-    admitted: dict[str, int] = {}
+def _earliest(rows) -> dict[str, int | None]:
+    """(chunk_id, attempt) rows → each chunk's earliest attempt; None for
+    files outside `attempt=N` dirs (a hand-built table has no attempts)."""
+    admitted: dict[str, int | None] = {}
     for cid, att in rows:
-        admitted[cid] = min(att, admitted.get(cid, att))
+        prev = admitted.get(cid, att)
+        admitted[cid] = None if att is None or prev is None else min(att, prev)
     return admitted
 
 
@@ -398,7 +400,7 @@ class TableMeta:
     out_dir: str
     attempts: list[int] | None
     types: dict[str, str | None]
-    admitted: dict[str, int] | None
+    admitted: dict[str, int | None] | None
     spark: SparkSession | None = None
     column: str | None = None
     admit: object = None
@@ -423,9 +425,15 @@ class TableMeta:
             thin = _thin_scan(self.spark, self.out_dir, self.column).drop("types")
             keep = thin.mapInArrow(_admitted_rows(self.admit, None), _ADMITTED_DDL)
             keep = keep.groupBy("chunk_id").agg(F.min("attempt").alias("attempt"))
-            return enc.join(keep, ["chunk_id", "attempt"], "left_semi")
+            on = (enc["chunk_id"] == keep["chunk_id"]) & enc["attempt"].eqNullSafe(keep["attempt"])
+            return enc.join(keep, on, "left_semi")
+        ids = F.col("chunk_id").isin(sorted(self.admitted))  # row-group pruning
+        if None in self.admitted.values():
+            # files outside attempt dirs: the scan's attempt is null, and
+            # such a table has no attempts to choose between
+            return enc.filter(ids)
         return enc.filter(
-            F.col("chunk_id").isin(sorted(self.admitted))  # row-group pruning
+            ids
             & F.col("attempt").isin(sorted(set(self.admitted.values())))  # partition pruning
             & F.concat_ws("@", "chunk_id", "attempt").isin([f"{c}@{a}" for c, a in self.admitted.items()])
         )

@@ -782,8 +782,11 @@ def column_metrics(encoded: DataFrame) -> DataFrame:
 def lineage_from_encoded(encoded: DataFrame, attempt: int = 1) -> DataFrame:
     """Derive per-chunk lineage rows from the encoded metrics (FIXTURES.md §2).
 
-    A crash between the encoded and lineage writes can leave duplicate chunk
-    rows; content is deterministic, so dedup keeps byte totals exact.
+    `encoded` is one `attempt=N` dir, committed by one write of a
+    `groupBy("chunk_id")` result (run() picks an N no existing dir has), so
+    no chunk id repeats in it and the rows need no dedup shuffle. A crash
+    between the encoded and lineage writes leaves that dir without lineage;
+    the resume writes a fresh attempt dir, never into this one.
     """
     summary = F.concat_ws(
         ",",
@@ -791,7 +794,7 @@ def lineage_from_encoded(encoded: DataFrame, attempt: int = 1) -> DataFrame:
             F.transform("columns", lambda c: F.concat_ws(":", c["column"], c["codec"]))
         ),
     )
-    return encoded.dropDuplicates(["chunk_id"]).select(
+    return encoded.select(
         "chunk_id",
         "input_fingerprint",
         F.lit("complete").alias("status"),

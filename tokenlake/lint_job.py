@@ -20,10 +20,9 @@ Lifecycle parity with the reference (SURVEY.md §3.1-3.2):
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
 from .chunking import (
@@ -31,6 +30,7 @@ from .chunking import (
     MAX_CHUNK_VALUES,
     assign_chunks,
     buckets_from_totals,
+    chunk_id_prefix,
     plan_buckets,
 )
 from .plan import EncodeConfig, Prescription, plan_from_decisions
@@ -209,7 +209,7 @@ def lint(
     full_depth: bool = False,
 ) -> DataFrame:
     """Sampled plan-only lint: decisions DataFrame, ordered by severity
-    (lib.rs:44 sort_by_key(severity)).
+    (lib.rs:44 sort_by_key(severity)), then chunk id and column.
 
     Two-pass by default, mirroring the reference's ambiguous-group strategy
     (dictionary_encoding.rs:155-172 + flow chart :29-68): a cheap screening
@@ -218,12 +218,19 @@ def lint(
     chunk; chunks whose cardinality ratio is CLEAR (< 0.1 ⇒ dictionary,
     > 0.5 ⇒ no dictionary) keep the screening decision, and only a strided
     5% of the AMBIGUOUS chunks (ratio in (0.1, 0.5)) are re-sampled at the
-    full `fraction` — the exact choose_sample_row_groups stride, computed as
-    a Spark predicate so the ambiguous chunk list never reaches the driver.
-    On a mostly-clear corpus the lint therefore moves ~10× fewer sampled
-    rows than a uniform `fraction` sample while emitting the same
-    prescriptions. (Driver-side state: one O(#sources) collect for the
-    stratified fractions — sources are datasets, not rows.)
+    full `fraction` — the choose_sample_row_groups stride as a hash
+    threshold, `pmod(xxhash64(chunk_id), n_amb) < k`, plus the hash-min
+    chunk so the deep pass never selects zero chunks. The deep pass runs
+    only when some chunk needs it. On a mostly-clear corpus the lint
+    therefore moves ~10× fewer sampled rows than a uniform `fraction`
+    sample while emitting the same prescriptions.
+
+    The decisions are built once, on the driver — one action each for the
+    O(#sources) totals and each pass, the ambiguous chunks picked in
+    Python — and come back as a local, Arrow-backed DataFrame: collecting
+    it or folding it into a prescription launches no Spark job. It holds
+    O(#chunks × #columns) rows of a few hundred bytes each (a 10^6-chunk,
+    10-column corpus is a few GB of driver memory).
 
     Every decision row carries `sample_fraction` (the fraction its chunk was
     actually sampled at) so downstream size extrapolation (R2's absolute
@@ -240,12 +247,13 @@ def lint(
     mv = cfg.effective_max_values(max_values)
 
     def pass_at(sampled: DataFrame, buckets: DataFrame, fracs: dict[str, float],
-                default_frac: float, only: DataFrame | None = None) -> DataFrame:
+                default_frac: float, only: list[str] | None = None) -> pa.Table:
         chunked = assign_chunks(sampled, buckets)
         if only is not None:
             # filter BEFORE the chunk shuffle: only selected chunks' sampled
             # rows move; everything else is dropped at the scan
-            chunked = chunked.join(F.broadcast(only), "chunk_id", "semi")
+            keep = spark.createDataFrame(pa.table({"chunk_id": pa.array(only, pa.string())}))
+            chunked = chunked.join(F.broadcast(keep), "chunk_id", "semi")
 
         def fn(t: pa.Table) -> pa.Table:
             # per-source fraction captured by closure: pyspark 4.1 infers the
@@ -256,99 +264,91 @@ def lint(
         d = chunked.groupBy("chunk_id").applyInArrow(fn, LINT_SCHEMA)
         if fracs:
             mapping = F.create_map(*[F.lit(x) for kv in fracs.items() for x in kv])
-            from .chunking import chunk_id_prefix
-
-            src_col = chunk_id_prefix()
-            frac_col = F.coalesce(mapping[src_col], F.lit(float(default_frac)))
+            frac_col = F.coalesce(mapping[chunk_id_prefix()], F.lit(float(default_frac)))
         else:
             frac_col = F.lit(float(default_frac))
-        return d.withColumn("sample_fraction", frac_col)
+        return d.withColumn("sample_fraction", frac_col).toArrow()
 
     if full_depth:
         # deterministic mode for the SQL oracle: every row, whole-stream
         # stats, chunks sorted in encode order — no sampling anywhere
-        buckets = plan_buckets(df, mr, mv)
-        decisions = pass_at(df, buckets, {}, 1.0)
+        decisions = pass_at(df, plan_buckets(df, mr, mv), {}, 1.0)
     elif not two_pass:
-        buckets = plan_buckets(df, mr, mv)
-        decisions = pass_at(df.sample(fraction=fraction, seed=seed), buckets, {}, fraction)
+        decisions = pass_at(df.sample(fraction=fraction, seed=seed), plan_buckets(df, mr, mv), {}, fraction)
     else:
         # one O(#sources) aggregate drives both the bucket plan and the
-        # per-source screening fractions
-        totals_df = df.groupBy("source").agg(
+        # per-source screening fractions; it reaches the driver once and
+        # goes back as a local frame, so neither pass re-runs it
+        totals = df.groupBy("source").agg(
             F.count("*").alias("rows"), F.sum("n_tok").alias("values")
-        ).localCheckpoint()
+        ).toArrow()
         # bucket counts come from THE shared formula (buckets_from_totals —
-        # the same expression plan_buckets applies in the encode path), fed
-        # from this pass's one O(#sources) aggregate: re-deriving the formula
-        # in driver python would drift the moment either copy changed, and
-        # lint chunk ids must match encode chunk ids
-        buckets = buckets_from_totals(totals_df, mr, mv)
-        nb = {r["source"]: r["nbuckets"] for r in buckets.collect()}
-        totals = totals_df.collect()
+        # the same expression plan_buckets applies in the encode path):
+        # re-deriving it in driver python would drift the moment either copy
+        # changed, and lint chunk ids must match encode chunk ids. Over a
+        # local frame, collecting them launches no job
+        buckets = buckets_from_totals(spark.createDataFrame(totals), mr, mv)
+        nb = dict(buckets.collect())
         cheap_fracs = {}
-        for r in totals:
-            vpc = float(r["values"] or 0) / nb[r["source"]]
+        for src, values in zip(totals["source"].to_pylist(), totals["values"].to_pylist()):
+            vpc = float(values or 0) / nb[src]
             f = fraction * CHEAP_PASS_RATIO
             if vpc > 0:
                 f = max(f, SCREEN_TARGET_VALUES / vpc)
-            cheap_fracs[r["source"]] = min(1.0, f)
-        # localCheckpoint: the screening decisions are O(#chunks × #columns)
-        # rows and get reused three times below
-        cheap = pass_at(
-            df.sampleBy("source", cheap_fracs, seed), buckets, cheap_fracs, fraction
-        ).localCheckpoint()
-        ambiguous = (F.col("cardinality_ratio") > DICT_ENABLE_RATIO) & (
-            F.col("cardinality_ratio") < DICT_REJECT_RATIO
-        )
+            cheap_fracs[src] = min(1.0, f)
+        decisions = pass_at(df.sampleBy("source", cheap_fracs, seed), buckets, cheap_fracs, fraction)
         # sources whose screening pass already sampled at ≥ the deep fraction
         # gain nothing from a re-sample — for small-chunk sources the floor
         # pushes the screening fraction past `fraction`, and a deep pass at
         # the lower rate would override a better-sampled decision with a
         # noisier one
-        deep_srcs = sorted(s for s, f in cheap_fracs.items() if f < fraction)
-        from .chunking import chunk_id_prefix
-
-        src_col = chunk_id_prefix()
-        amb = (
-            cheap.filter(ambiguous)
-            .filter(src_col.isin(deep_srcs) if deep_srcs else F.lit(False))
-            .select("chunk_id")
-            .distinct()
-        )
-        n_amb = amb.count()
-        if n_amb == 0:
-            decisions = cheap
-        else:
+        deep_srcs = {s for s, f in cheap_fracs.items() if f < fraction}
+        amb = sorted({
+            cid
+            for cid, ratio in zip(decisions["chunk_id"].to_pylist(), decisions["cardinality_ratio"].to_pylist())
+            if DICT_ENABLE_RATIO < ratio < DICT_REJECT_RATIO and cid.rsplit("#", 1)[0] in deep_srcs
+        })
+        if amb:
+            n_amb = len(amb)
             k = max(1, math.ceil(n_amb * AMBIGUOUS_SAMPLE_RATIO))
-            # deterministic ~k-of-n spread via a hash threshold — a pure
-            # per-row predicate, no global row_number window (which would
-            # funnel every ambiguous chunk id through ONE task at
-            # millions-of-chunks scale). The hash-min chunk is unioned in so
-            # the deep pass can never select zero chunks.
-            hash_pred = F.pmod(F.xxhash64("chunk_id"), F.lit(n_amb)) < F.lit(k)
-            first = amb.orderBy(F.xxhash64("chunk_id")).limit(1)
-            sel = amb.filter(hash_pred).unionByName(first).distinct()
-            deep_fracs = {s: min(1.0, fraction) for s in deep_srcs}
+            # Spark's xxhash64 as a projection of a local frame (no job);
+            # python's % by a positive n is pmod
+            hashed = spark.createDataFrame(pa.table({"chunk_id": amb})).select(
+                "chunk_id", F.xxhash64("chunk_id")
+            ).collect()
+            sel = {cid for cid, h in hashed if h % n_amb < k}
+            sel.add(min(hashed, key=lambda r: r[1])[0])
+            deep_fracs = {s: min(1.0, fraction) for s in sorted(deep_srcs)}
             deep = pass_at(
                 df.sampleBy("source", deep_fracs, seed + 1),
-                buckets, deep_fracs, fraction, only=sel,
-            ).localCheckpoint()
+                buckets, deep_fracs, fraction, only=sorted(sel),
+            )
             # replace screening rows only for chunks the deep pass actually
             # covered: a tiny chunk can draw ZERO rows in the deep sample,
-            # and anti-joining on `sel` would silently drop its decisions
-            covered = deep.select("chunk_id").distinct()
-            decisions = cheap.join(F.broadcast(covered), "chunk_id", "left_anti").unionByName(deep)
-    rank = F.when(F.col("severity") == "error", 2).when(F.col("severity") == "warning", 1).otherwise(0)
-    return decisions.orderBy(rank.desc(), "chunk_id", "column")
+            # and dropping every selected chunk would lose its decisions
+            covered = pc.is_in(decisions["chunk_id"], value_set=deep["chunk_id"].combine_chunks())
+            decisions = pa.concat_tables([decisions.filter(pc.invert(covered)), deep])
+    sev = decisions["severity"]
+    rank = pc.if_else(pc.equal(sev, "error"), 2, pc.if_else(pc.equal(sev, "warning"), 1, 0))
+    decisions = decisions.append_column("rank", rank).sort_by(
+        [("rank", "descending"), ("chunk_id", "ascending"), ("column", "ascending")]
+    )
+    return spark.createDataFrame(decisions.drop_columns(["rank"]))
 
 
 def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Prescription:
-    """Collapse per-chunk decisions to a per-column prescription: majority
-    codec per column (the reference's most_frequent property inference,
-    fix.rs:196-211, tie → the smaller codec name) plus the R2 outer-codec
-    majority vote (outer_policy.py), the R10 small-pages and R1 dictionary
-    page directives, emitted in the same `set column …` DSL.
+    """Collapse per-chunk decisions to a per-column prescription: an
+    `encoding` directive where every linted chunk of the column picked the
+    same codec, plus the R2 outer-codec majority vote (outer_policy.py), the
+    R10 small-pages and R1 dictionary page directives, emitted in the same
+    `set column …` DSL.
+
+    The reference prescribes each column's most frequent codec
+    (most_frequent, fix.rs:196-211) because a Parquet writer takes one
+    encoding per column; the encoder picks a codec per chunk, so forcing a
+    majority codec would override better per-chunk choices, and a column
+    whose chunks disagree is left to the encoder. R1's dictionary-page
+    growth still keys on the majority codec (tie → the smaller codec name).
 
     Sampled body bytes are rescaled to full-data magnitudes so the
     reference's absolute size thresholds (8 MB column floor, 4 MB speed
@@ -358,13 +358,13 @@ def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Pre
     (useful to emulate a larger corpus in tests, default 1.0 — callers no
     longer pass 1/fraction).
 
-    ONE Spark aggregate per (column, codec) — O(#columns × #codecs) rows
-    reach the driver — and every rule is folded from it on the driver, the
-    same shape as `encode_job.plan_from_encoded`. Directives come out by
-    family (encoding, compression, data_page_size_limit,
-    dictionary_page_size_limit, file max_chunk_rows), columns sorted within
-    each."""
-    from pyspark.sql import functions as F
+    Driver code: the decisions are collected once — O(#chunks × #columns)
+    rows, and no Spark job on lint's local frame — and every rule is folded
+    from per-column sums, the same shape as `encode_job.plan_from_encoded`.
+    Directives come out by family (encoding, compression,
+    data_page_size_limit, dictionary_page_size_limit, file max_chunk_rows),
+    columns sorted within each."""
+    from collections import Counter
 
     from . import outer_policy as OP
     from .plan import R10_PAGE_BYTES, Directive
@@ -375,53 +375,41 @@ def prescription_from_decisions(decisions: DataFrame, scale: float = 1.0) -> Pre
         suggested_max_chunk_rows,
     )
 
-    b = F.col("body_bytes") * F.lit(float(scale))
-    # payload estimates are full-chunk magnitudes (lint_chunk extrapolates
-    # stats), so R1's current-rows input must be full-chunk too — raw
-    # sample_rows would shrink ~fraction× more than needed
-    rows = F.col("sample_rows").cast("double")
-    if "sample_fraction" in decisions.columns:
-        b = b / F.col("sample_fraction")
-        rows = rows / F.col("sample_fraction")
-    vote = (
-        F.when(F.col("outer_ratio") > OP.RATIO_SKIP, F.lit("none"))
-        .when(b > OP.SPEED_THRESHOLD_BYTES, F.lit("lz4"))
-        .otherwise(F.lit("zstd"))
-    )
-    groups = (
-        decisions.groupBy("column", "codec")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(b).alias("b"),
-            F.max(b).alias("max_b"),
-            F.sum(b * F.col("outer_ratio")).alias("b_ratio"),
-            F.sum(F.when(vote == "lz4", 1).otherwise(0)).alias("lz4"),
-            F.sum(F.when(vote == "zstd", 1).otherwise(0)).alias("zstd"),
-            F.sum("sample_values").alias("values"),
-            F.sum("sample_rows").alias("rows"),
-            F.max("dict_payload_bytes").alias("payload"),
-            F.max(rows).alias("max_rows"),
-        )
-        .collect()
-    )
+    has_frac = "sample_fraction" in decisions.columns
     cols: dict[str, dict] = {}
-    for g in sorted(groups, key=lambda g: (g["column"], g["codec"])):
+    for r in decisions.collect():
+        f = r["sample_fraction"] if has_frac else 1.0
+        b = r["body_bytes"] * float(scale) / f
         c = cols.setdefault(
-            g["column"],
-            {"codec": g["codec"], "best": 0, "n": 0, "b": 0.0, "max_b": 0.0,
-             "b_ratio": 0.0, "lz4": 0, "zstd": 0, "values": 0, "rows": 0,
+            r["column"],
+            {"codecs": Counter(), "n": 0, "b": 0.0, "max_b": 0.0, "b_ratio": 0.0,
+             "none": 0, "lz4": 0, "zstd": 0, "values": 0, "rows": 0,
              "payload": 0, "max_rows": 0.0},
         )
-        # codecs arrive name-sorted, so a strict > keeps the smaller name
-        # on a tie
-        if g["n"] > c["best"]:
-            c["codec"], c["best"] = g["codec"], g["n"]
-        for k in ("n", "b", "b_ratio", "lz4", "zstd", "values", "rows"):
-            c[k] += g[k] or 0
-        for k in ("max_b", "payload", "max_rows"):
-            c[k] = max(c[k], g[k] or 0)
+        c["codecs"][r["codec"]] += 1
+        vote = (
+            "none" if r["outer_ratio"] > OP.RATIO_SKIP
+            else "lz4" if b > OP.SPEED_THRESHOLD_BYTES else "zstd"
+        )
+        c["n"] += 1
+        c["b"] += b
+        c["max_b"] = max(c["max_b"], b)
+        c["b_ratio"] += b * r["outer_ratio"]
+        c[vote] += 1
+        c["values"] += r["sample_values"]
+        c["rows"] += r["sample_rows"]
+        c["payload"] = max(c["payload"], r["dict_payload_bytes"])
+        # payload estimates are full-chunk magnitudes (lint_chunk extrapolates
+        # stats), so R1's current-rows input must be full-chunk too — raw
+        # sample_rows would shrink ~fraction× more than needed
+        c["max_rows"] = max(c["max_rows"], r["sample_rows"] / f)
+    for c in cols.values():
+        # most chunks first, then the smaller codec name
+        c["codec"] = min(c["codecs"].items(), key=lambda kv: (-kv[1], kv[0]))[0]
 
-    rx = plan_from_decisions([{"column": k, "codec": c["codec"]} for k, c in sorted(cols.items())])
+    rx = plan_from_decisions(
+        [{"column": k, "codec": c["codec"]} for k, c in sorted(cols.items()) if len(c["codecs"]) == 1]
+    )
     for k, c in sorted(cols.items()):
         kind, is_text = OP.COLUMN_KINDS.get(k, (None, None))
         v = OP.decide(

@@ -23,12 +23,28 @@ self-contained under its chunk_id.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession, functions as F
 
 from . import encode_job
 from .plan import EncodeConfig
 from .schema import SEQUENCES_SPARK_SCHEMA
+
+
+def _has_data_files(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists and holds a file a Spark scan would read:
+    entries under a `.`- or `_`-prefixed name are skipped, as the scan
+    skips them. Stops at the first such file."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return False
+    prefix = fs.makeQualified(root).toUri().getPath().rstrip("/") + "/"
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        rel = files.next().getPath().toUri().getPath()[len(prefix):]
+        if not any(p.startswith((".", "_")) for p in rel.split("/")):
+            return True
+    return False
 
 
 def encode_stream(
@@ -67,17 +83,17 @@ def encode_stream(
     of being silently dropped.
     """
     if schema is None:
-        try:
+        # ONLY a missing dir or one with no data files falls back to the
+        # canonical schema (Spark's file stream then refuses a missing dir):
+        # swallowing a transient FS error here would pin a 4-column schema
+        # for the query's checkpointed lifetime and silently drop every
+        # extra column from the stream. Decided on the Hadoop FS, not by a
+        # failing read: once an Observation has run in the session, its
+        # listener logs every failed query as an error
+        if _has_data_files(spark, input_dir):
             schema = spark.read.parquet(input_dir).schema  # footer sniff
-        except AnalysisException as e:
-            # ONLY the empty/missing-dir case may fall back to the canonical
-            # schema: swallowing a transient FS error here would pin a
-            # 4-column schema for the query's checkpointed lifetime and
-            # silently drop every extra column from the stream
-            if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-                schema = SEQUENCES_SPARK_SCHEMA
-            else:
-                raise
+        else:
+            schema = SEQUENCES_SPARK_SCHEMA
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
